@@ -20,12 +20,15 @@ object Insights {
       by_loan_type: Option[Seq[LoanTypeCount]])
 
   def compute(df: DataFrame): Summary = {
-    val total = df.count()
+    // total and mean in one action: count(1) is what `df.count()` runs
+    val hasAmount = df.columns.contains("loan_amount")
+    val row = df
+      .agg(count(lit(1)), (if (hasAmount) Seq(avg_(col("loan_amount"))) else Nil): _*)
+      .first()
+    val total = row.getLong(0)
     val avg =
-      if (!df.columns.contains("loan_amount")) None
-      else
-        Option(df.agg(avg_(col("loan_amount"))).first().get(0))
-          .map(_.asInstanceOf[Number].doubleValue())
+      if (!hasAmount) None
+      else Option(row.get(1)).map(_.asInstanceOf[Number].doubleValue())
     val byType =
       if (!df.columns.contains("loan_type")) None
       else

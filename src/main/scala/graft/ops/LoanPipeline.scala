@@ -7,8 +7,15 @@ import graft.io.{Sinks, Sources}
   * `run_etl`): CSV (header + inferSchema) -> mode null-fill -> timestamp
   * split -> overwrite parquet + insights JSON.
   *
+  * The default fill is [[ModeFill.fillNullsWithMode]]: every column's
+  * typed mode from one grouping-sets aggregation (one CSV pass per 64
+  * columns), where the reference runs a groupBy, a top-1 and a driver
+  * collect per column. `singlePassModeFill` selects the unpivot shape,
+  * whose modes round-trip through strings and so can break a count tie
+  * differently from the reference's typed order.
+  *
   * Scale departure from the reference: the cleaned frame is cached before
-  * the write + three insight actions — the reference re-executes the scan
+  * the write + two insight actions — the reference re-executes the scan
   * and projection pipeline once per action (SURVEY.md §3 step 6), which at
   * 100 TB means four full input scans.
   */

@@ -15,24 +15,54 @@ import org.apache.spark.sql.functions._
   */
 object ModeFill {
 
-  /** Reference-parity shape: one top-1 aggregation per column (the mode
-    * query compiles to TakeOrderedAndProject — no full sort). Fine for
-    * narrow tables; at scale prefer [[fillNullsWithModeSinglePass]].
+  /** Spark's cap on the expressions of one grouping-sets aggregate
+    * (`GROUPING_SIZE_LIMIT_EXCEEDED`); wider frames are filled in chunks.
+    */
+  private val MaxGroupingSets = 64
+
+  /** `runEtl`'s fill: the reference's per-column modes, computed for up to
+    * 64 columns in ONE aggregation (GROUPING SETS — Catalyst plans it as
+    * one Expand plus one aggregate, one scan of the input), then applied
+    * in one projection. Set i varies only column i, so ordering a set's
+    * rows by (count desc, every column asc nulls first) is column i's own
+    * typed `asc_nulls_first` tie-break — exactly the per-column query's
+    * ORDER BY. The per-set top-1 is the native bounded-heap TopK, so the
+    * driver fetches at most one row per column. A frame with no rows, or
+    * a column whose mode is null, is left as it is.
     */
   def fillNullsWithMode(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
-    val target = if (cols.isEmpty) df.columns.toSeq else cols
-    target.foldLeft(df) { (cur, c) =>
-      val mode = cur
-        .groupBy(col(c))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc_nulls_first(c))
-        .limit(1)
-        .collect()(0)
-        .get(0)
-      if (mode == null) cur
-      else cur.withColumn(c, coalesce(col(c), lit(mode)))
-    }
+    val target = (if (cols.isEmpty) df.columns.toSeq else cols).distinct
+    val modes = target.grouped(MaxGroupingSets).flatMap(typedModes(df, _)).toMap
+    val filled = target.filter(modes.contains)
+    if (filled.isEmpty) df
+    else df.withColumns(filled.map(c => c -> coalesce(ref(c), lit(modes(c)))).toMap)
   }
+
+  /** Non-null typed modes of `cols` (at most 64) from one grouping-sets
+    * aggregation; a column with a null mode is absent.
+    */
+  private def typedModes(df: DataFrame, cols: Seq[String]): Map[String, Any] = {
+    val n = cols.size
+    val (gid, cnt) = ("__mode_gid", "__mode_cnt")
+    // grouping_id() sets the bit of every column NOT in the set, first
+    // column most significant: set i is all-ones minus bit (n - 1 - i)
+    val allOnes = -1L >>> (64 - n)
+    val colOf = cols.indices.map(i => (allOnes ^ (1L << (n - 1 - i))) -> i).toMap
+    val keyed = df
+      .groupingSets(cols.map(c => Seq(ref(c))), cols.map(ref): _*)
+      .agg(grouping_id().as(gid), count(lit(1)).as(cnt))
+    org.apache.spark.sql.graftnative.TopK
+      .perKey(keyed, Seq(gid), (cnt -> true) +: cols.map(_ -> false), 1)
+      .collect()
+      .flatMap { r =>
+        val i = colOf(r.getAs[Number](gid).longValue)
+        Option(r.get(i)).map(cols(i) -> _)
+      }
+      .toMap
+  }
+
+  // column names are user-controlled: quote them so dots stay literal
+  private def ref(c: String) = col("`" + c.replace("`", "``") + "`")
 
   /** Scale variant: ONE aggregation job for all columns instead of a
     * groupBy + driver collect per column (the reference's per-column shape

@@ -91,6 +91,16 @@ class LoanPipelineSpec extends SparkSpec {
     assert(back.columns.contains("date") && back.columns.contains("time"))
   }
 
+  test("header-only CSV: zero rows flow through to an empty parquet") {
+    val out = Files.createTempDirectory("graft_etl6").toString
+    val r = LoanPipeline.runEtl(spark, resource("loans_header_only.csv"), s"$out/parquet")
+    assert(r.insights.total_loans == 0)
+    val back = spark.read.parquet(s"$out/parquet")
+    assert(back.count() == 0)
+    assert(back.columns.toSeq ==
+      Seq("loan_id", "loan_amount", "loan_type", "timestamp", "date", "time"))
+  }
+
   test("insights JSON golden shape matches the reference document") {
     val s = Insights.Summary(100, None, None)
     assert(Insights.toJson(s) == "{\n  \"total_loans\": 100\n}")

@@ -1,10 +1,50 @@
 package graft.ops
 
+import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class ModeFillSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The reference's shape (`pyspark_etl.py:14-21`) with the typed
+    * tie-break: a top-1 query and a driver collect per column.
+    */
+  private def perColumnReference(df: DataFrame): DataFrame =
+    df.columns.foldLeft(df) { (cur, c) =>
+      val mode = cur
+        .groupBy(col(c))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), asc_nulls_first(c))
+        .limit(1)
+        .collect()(0)
+        .get(0)
+      if (mode == null) cur
+      else cur.withColumn(c, coalesce(col(c), lit(mode)))
+    }
+
+  /** `id` plus `n` columns of rotating type (long, string, double), each
+    * with nulls planted on its own stride; `c3` is null-majority.
+    */
+  private def wideFrame(n: Int, rows: Int): DataFrame = {
+    val id = col("id")
+    val cols = (0 until n).map { i =>
+      val v = i % 3 match {
+        case 0 => id % (i % 5 + 2)
+        case 1 => concat(lit("s"), (id % (i % 4 + 3)).cast("string"))
+        case _ => (id % (i % 6 + 2)).cast("double") / 2
+      }
+      val isNull = if (i == 3) id % 4 =!= 0 else id % (i % 7 + 5) === 0
+      when(isNull, lit(null)).otherwise(v).as(s"c$i")
+    }
+    spark.range(rows).select(id +: cols: _*)
+  }
 
   test("fills nulls with the most frequent value") {
     val df = Seq(Some("a"), Some("a"), Some("b"), None, None)
@@ -59,5 +99,54 @@ class ModeFillSpec extends SparkSpec {
     assert(modes("a") == Some("1"))
     assert(modes("b") == Some("x"))
     assert(modes("c") == Some("3.0"))
+  }
+
+  test("typed tie-break: an int 9-vs-10 tie fills 9, not string-order 10") {
+    val t1 = Timestamp.valueOf("2024-01-02 00:00:00")
+    val t2 = Timestamp.valueOf("2024-01-10 00:00:00")
+    val df = Seq[(Integer, Timestamp)](
+      (10, t2), (9, t1), (10, t2), (9, t1), (null, null)
+    ).toDF("n", "ts")
+    val out = ModeFill.fillNullsWithMode(df).collect()
+    assert(out.map(_.getInt(0)).count(_ == 9) == 3)
+    assert(out.map(_.getTimestamp(1)).count(_ == t1) == 3)
+    // the unpivot shape orders the strings "10" < "9" instead
+    assert(ModeFill.modesSinglePass(df)("n") == Some("10"))
+  }
+
+  test("more than 64 columns: chunked grouping sets equal the per-column reference") {
+    val df = wideFrame(70, 240)
+    val got = ModeFill.fillNullsWithMode(df)
+    val want = perColumnReference(df)
+    assert(got.schema == want.schema)
+    assert(got.orderBy("id").collect().toSeq == want.orderBy("id").collect().toSeq)
+    // the null-majority column keeps its nulls; c0 (a 0-vs-1 tie) is filled
+    assert(got.filter(col("c3").isNull).count() == 180)
+    assert(got.filter(col("c0").isNull).count() == 0)
+  }
+
+  test("zero rows: the frame comes back unchanged") {
+    val df = wideFrame(5, 0)
+    val out = ModeFill.fillNullsWithMode(df)
+    assert(out.schema == df.schema)
+    assert(out.count() == 0)
+  }
+
+  test("25 columns are filled by exactly one query") {
+    val df = wideFrame(25, 100)
+    val queries = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    ListenerSync.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      ModeFill.fillNullsWithMode(df)
+      ListenerSync.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(queries.get == 1)
   }
 }

@@ -13,7 +13,7 @@ fail=0
 for sf in "${sfs[@]}"; do
   out="/tmp/precheck_sf$sf"
   echo "== sf$sf: Verify -> $out"
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch \
     "runMain graft.Verify /root/testdata/sf$sf $out" > "/tmp/precheck_sf$sf.log" 2>&1 \
     || { echo "VERIFY FAILED at sf$sf (see /tmp/precheck_sf$sf.log)"; fail=1; continue; }
   n_warn=$(grep -c "No Partition Defined" "/tmp/precheck_sf$sf.log" || true)
