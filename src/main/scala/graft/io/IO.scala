@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Sources & sinks matching the reference's I/O surface (SURVEY.md §2A
@@ -9,15 +9,31 @@ import java.nio.file.{Files, Paths}
   * writing to an s3a:// path through the same writer.
   */
 object Sources {
-  /** S1 — `read.option(header).option(inferSchema).csv(path)`
-    * (pyspark_etl.py:51). Spark decompresses .csv.gz transparently, like
-    * the reference's upstream contract (spark_etl_dag.py:47).
+  /** S1 — `read.option(header).option(inferSchema).csv(...)`
+    * (pyspark_etl.py:51), with the same schema inference and PERMISSIVE
+    * parse, over the file's lines read as one split per core.
+    *
+    * The file source sizes splits as `max(openCostInBytes, bytes / cores)`
+    * with a 4 MB session-wide floor, so any file under cores x 4 MB would
+    * arrive as ONE partition and every stage downstream would run as one
+    * task. `textFile(path, defaultParallelism)` splits on line boundaries
+    * instead; split 0 starts at byte 0, so it holds the header. A .csv.gz
+    * is decompressed transparently, like the reference's upstream
+    * contract (spark_etl_dag.py:47), and stays one unsplittable split.
+    *
+    * Departure from the reference: every line equal to the header is
+    * dropped, so a header repeated mid-file (e.g. concatenated exports)
+    * is not parsed as a junk row. The path-based read keeps it as a row
+    * of nulls and header strings, although its schema inference skips it.
     */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
+  def csvInferred(spark: SparkSession, path: String): DataFrame = {
+    val sc = spark.sparkContext
+    val lines = spark.createDataset(sc.textFile(path, sc.defaultParallelism))(Encoders.STRING)
     spark.read
       .option("header", "true")
       .option("inferSchema", "true")
-      .csv(path)
+      .csv(lines)
+  }
 
   /** JSONL corpus source — the interchange format LLM training corpora
     * actually ship in (one JSON document per line, gzip-splittable per

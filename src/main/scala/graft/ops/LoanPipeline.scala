@@ -15,9 +15,13 @@ import graft.io.{Sinks, Sources}
   * differently from the reference's typed order.
   *
   * Scale departure from the reference: the cleaned frame is cached before
-  * the write + two insight actions — the reference re-executes the scan
+  * the write and the insights action — the reference re-executes the scan
   * and projection pipeline once per action (SURVEY.md §3 step 6), which at
-  * 100 TB means four full input scans.
+  * 100 TB means four full input scans. `Result.cleaned` is returned still
+  * cached: the caller owns it and calls `unpersist()` when done.
+  *
+  * The CSV arrives as one split per core ([[Sources.csvInferred]]), so a
+  * small file's fill, write and insights run as parallel tasks.
   */
 object LoanPipeline {
   case class Result(insights: Insights.Summary, cleaned: DataFrame)

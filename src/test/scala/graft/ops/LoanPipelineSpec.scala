@@ -1,7 +1,11 @@
 package graft.ops
 
-import graft.SparkSpec
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkSpec
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class LoanPipelineSpec extends SparkSpec {
 
@@ -95,10 +99,37 @@ class LoanPipelineSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_etl6").toString
     val r = LoanPipeline.runEtl(spark, resource("loans_header_only.csv"), s"$out/parquet")
     assert(r.insights.total_loans == 0)
+    assert(r.insights.avg_loan_amount.isEmpty)
+    assert(r.insights.by_loan_type.contains(Nil))
     val back = spark.read.parquet(s"$out/parquet")
     assert(back.count() == 0)
     assert(back.columns.toSeq ==
       Seq("loan_id", "loan_amount", "loan_type", "timestamp", "date", "time"))
+  }
+
+  test("insights: one aggregate in at most two jobs, by-type order typed") {
+    import spark.implicits._
+    // counts 2, 2, 2, 1: the ties order null, 9, 10 (typed), not "10" < "9"
+    val df = Seq[(Option[Int], Double)](
+      (Some(10), 1.0), (Some(9), 3.0), (None, 2.0), (Some(10), 4.0),
+      (Some(9), 5.0), (None, 6.0), (Some(7), 0.0)).toDF("loan_type", "loan_amount")
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val s = try {
+      val s = Insights.compute(df)
+      ListenerSync.drain(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 2)
+    assert(s.total_loans == 7)
+    assert(s.avg_loan_amount.contains(3.0))
+    assert(s.by_loan_type.contains(Seq(
+      Insights.LoanTypeCount(None, 2), Insights.LoanTypeCount(Some("9"), 2),
+      Insights.LoanTypeCount(Some("10"), 2), Insights.LoanTypeCount(Some("7"), 1))))
   }
 
   test("insights JSON golden shape matches the reference document") {
