@@ -1,5 +1,7 @@
 package graft.io
 
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import java.nio.file.{Files, Paths}
 
@@ -16,23 +18,37 @@ object Sources {
     * The file source sizes splits as `max(openCostInBytes, bytes / cores)`
     * with a 4 MB session-wide floor, so any file under cores x 4 MB would
     * arrive as ONE partition and every stage downstream would run as one
-    * task. `textFile(path, defaultParallelism)` splits on line boundaries
-    * instead; split 0 starts at byte 0, so it holds the header. A .csv.gz
-    * is decompressed transparently, like the reference's upstream
-    * contract (spark_etl_dag.py:47), and stays one unsplittable split.
+    * task. Hadoop's `TextInputFormat` asked for `defaultParallelism` splits
+    * cuts on line boundaries instead; split 0 starts at byte 0, so it holds
+    * the header. A .csv.gz is decompressed transparently, like the
+    * reference's upstream contract (spark_etl_dag.py:47), and stays one
+    * unsplittable split. The lines are read with the session's Hadoop conf,
+    * as the path read does, so `fs.*` keys set with `spark.conf.set` apply.
     *
-    * Departure from the reference: every line equal to the header is
-    * dropped, so a header repeated mid-file (e.g. concatenated exports)
-    * is not parsed as a junk row. The path-based read keeps it as a row
-    * of nulls and header strings, although its schema inference skips it.
+    * Departures from the path read:
+    *  - every line equal to the header is dropped, so a header repeated
+    *    mid-file (e.g. concatenated exports) is not parsed as a junk row.
+    *    The path read keeps it as a row of nulls and header strings,
+    *    although its schema inference skips it.
+    *  - `spark.sql.files.ignoreCorruptFiles` / `ignoreMissingFiles` do not
+    *    apply; the line read follows `spark.files.ignoreCorruptFiles` /
+    *    `ignoreMissingFiles` instead.
+    *  - the result is parsed from the lines, not scanned, so there is no
+    *    column pruning: selecting a few columns still parses every column.
+    *    `runEtl` uses every column.
     */
   def csvInferred(spark: SparkSession, path: String): DataFrame = {
     val sc = spark.sparkContext
-    val lines = spark.createDataset(sc.textFile(path, sc.defaultParallelism))(Encoders.STRING)
+    val conf = new JobConf(spark.sessionState.newHadoopConf())
+    FileInputFormat.setInputPaths(conf, path)
+    val lines = sc
+      .hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+        sc.defaultParallelism)
+      .map(_._2.toString)
     spark.read
       .option("header", "true")
       .option("inferSchema", "true")
-      .csv(lines)
+      .csv(spark.createDataset(lines)(Encoders.STRING))
   }
 
   /** JSONL corpus source — the interchange format LLM training corpora

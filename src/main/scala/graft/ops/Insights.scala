@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   * entries are emitted only when the column exists (pyspark_etl.py:40,43).
   * The reference leaves by-type record order arbitrary; we order by
   * (count desc, loan_type asc nulls first) so goldens are stable.
+  *
+  * `avg_loan_amount` merges one partial double sum per input partition,
+  * so its last bits depend on the partition count (and, on a cluster, on
+  * the order partials are fetched in). It is not bit-identical to the
+  * reference's mean or to a one-partition sum.
   */
 object Insights {
   case class LoanTypeCount(loan_type: Option[String], count: Long)

@@ -1,10 +1,20 @@
 package graft.io
 
+import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.sql.DataFrame
+
+/** A local-disk FileSystem under its own scheme, registered only in the
+  * session's conf by the test that uses it.
+  */
+class SessionSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("graftsession://bucket/")
+  override def getScheme: String = "graftsession"
+}
 
 /** `Sources.csvInferred` reads the CSV's lines as one split per core; these
   * cases pin that it keeps the path-based read's schema and rows.
@@ -86,5 +96,17 @@ class SourcesSpec extends SparkSpec {
     assert(kept.schema == got.schema)
     assert(kept.count() == 4)
     assert(kept.filter(kept("loan_type") === "loan_type").count() == 1)
+  }
+
+  test("the read uses the session's Hadoop conf, like the path read") {
+    val key = "fs.graftsession.impl"
+    spark.conf.set(key, classOf[SessionSchemeFileSystem].getName)
+    try {
+      val uri = s"graftsession://bucket${resource("loans_basic.csv")}"
+      // read before the path read so no cached FileSystem hides a miss
+      val got = Sources.csvInferred(spark, uri)
+      assertSameRows(got, pathRead(uri))
+      assertSameRows(got, pathRead(resource("loans_basic.csv")))
+    } finally spark.conf.unset(key)
   }
 }

@@ -1,20 +1,20 @@
 #!/usr/bin/env bash
 # A/B the benchmark's end-to-end metrics: a parent commit against this checkout.
 #
-#   tools/ab.sh <parent-sha> <workload> <pairs> [first-seed]
+#   tools/ab.sh <parent-sha> <workload> <pairs>
 #
 # Exports <parent-sha> with `git archive` into a new directory under
 # ${TMPDIR:-/tmp} and runs `perfbench/run.py --trace 0` on it and on this
-# checkout's working tree, one pair per seed (first-seed, default 1, up to
-# first-seed + pairs - 1). The parent goes first in odd pairs, this checkout
-# in even ones, so host drift does not favour one side. Each run's record
+# checkout's working tree, one pair per seed (seeds 1 to <pairs>). The
+# parent goes first in odd pairs, this checkout in even ones, so host
+# drift does not favour one side. Each run's record
 # (.bench_build/records/*.json) and log are kept under the export directory.
 # The summary prints, per end-to-end metric in BENCHMARK.json, each side's
 # median and quartiles, the change/parent ratio of the medians, the pairs
 # the change won, and the failed operations over all runs.
 set -euo pipefail
 [ $# -ge 3 ] || { sed -n 4p "$0" >&2; exit 2; }
-parent=$1 workload=$2 pairs=$3 first=${4:-1}
+parent=$1 workload=$2 pairs=$3
 here=$(cd "$(dirname "$0")/.." && pwd)
 dir=$(mktemp -d "${TMPDIR:-/tmp}/ab.XXXXXX")
 mkdir -p "$dir/parent" "$dir/records"
@@ -31,20 +31,19 @@ run() { # side checkout seed
   if [ -f "$rec" ]; then cp "$rec" "$dir/records/$1-$3.json"; fi
 }
 
-for ((i = 0; i < pairs; i++)); do
-  seed=$((first + i))
-  if ((i % 2 == 0)); then
+for ((seed = 1; seed <= pairs; seed++)); do
+  if ((seed % 2 == 1)); then
     run parent "$dir/parent" "$seed"; run change "$here" "$seed"
   else
     run change "$here" "$seed"; run parent "$dir/parent" "$seed"
   fi
 done
 
-python3 - "$here/BENCHMARK.json" "$dir/records" "$workload" "$first" "$pairs" <<'EOF'
+python3 - "$here/BENCHMARK.json" "$dir/records" "$workload" "$pairs" <<'EOF'
 import json, os, statistics, sys
 
-bench, records, workload, first, pairs = sys.argv[1], sys.argv[2], sys.argv[3], *map(int, sys.argv[4:])
-seeds = range(first, first + pairs)
+bench, records, workload, pairs = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
+seeds = range(1, pairs + 1)
 
 def load(side, seed):
     p = os.path.join(records, f"{side}-{seed}.json")
@@ -62,7 +61,7 @@ def value(rec, name):
     v = rec["metrics"].get(name, {}).get("value", -1.0) if rec else -1.0
     return v if v > 0 else None  # -1: the run or its samples failed
 
-print(f"workload {workload}, seeds {first}-{first + pairs - 1}, {pairs} pairs")
+print(f"workload {workload}, seeds 1-{pairs}, {pairs} pairs")
 print("| metric | parent median [q1, q3] | change median [q1, q3] | ratio | change won |")
 print("|---|---|---|---|---|")
 for m in json.load(open(bench))["end_to_end"]:
