@@ -8,9 +8,10 @@ import graft.io.{Sinks, Sources}
   * split -> overwrite parquet + insights JSON.
   *
   * The default fill is [[ModeFill.fillNullsWithMode]]: every column's
-  * typed mode from one grouping-sets aggregation (one CSV pass per 64
-  * columns), where the reference runs a groupBy, a top-1 and a driver
-  * collect per column. `singlePassModeFill` selects the unpivot shape,
+  * typed mode from one aggregation over one CSV pass, whatever the width,
+  * where the reference runs a groupBy, a top-1 and a driver collect per
+  * column. Its expanded rows hold one slot per inferred type, not one per
+  * column. `singlePassModeFill` selects the unpivot shape,
   * whose modes round-trip through strings and so can break a count tie
   * differently from the reference's typed order.
   *

@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
   * `airflow/dags/etl/pyspark_etl.py:14-21`, per-column mode with the null
   * group participating).
   *
-  * Why a third shape: the typed grouping-sets fill
+  * Why a third shape: the typed-slot fill
   * ([[ModeFill.fillNullsWithMode]]) and the unpivot shape
   * ([[ModeFill.modesSinglePass]]) are one job each but pay an Expand —
   * every input row becomes `ncols` rows before the partial aggregate
-  * collapses them. This Aggregator keeps
+  * collapses them (1 + #types wide in the typed fill, 2 wide in the
+  * unpivot). This Aggregator keeps
   * each row intact and counts ALL columns in one object-hash pass: the
   * partial state is a per-column value→count map plus a per-column null
   * counter, merged across partitions; only `ncols` map states ever cross the

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.{SlotExpand, TopK}
 
 /** Null-imputation by per-column mode.
   *
@@ -15,48 +16,45 @@ import org.apache.spark.sql.functions._
   */
 object ModeFill {
 
-  /** Spark's cap on the expressions of one grouping-sets aggregate
-    * (`GROUPING_SIZE_LIMIT_EXCEEDED`); wider frames are filled in chunks.
-    */
-  private val MaxGroupingSets = 64
-
-  /** `runEtl`'s fill: the reference's per-column modes, computed for up to
-    * 64 columns in ONE aggregation (GROUPING SETS — Catalyst plans it as
-    * one Expand plus one aggregate, one scan of the input), then applied
-    * in one projection. Set i varies only column i, so ordering a set's
-    * rows by (count desc, every column asc nulls first) is column i's own
-    * typed `asc_nulls_first` tie-break — exactly the per-column query's
-    * ORDER BY. The per-set top-1 is the native bounded-heap TopK, so the
-    * driver fetches at most one row per column. A frame with no rows, or
-    * a column whose mode is null, is left as it is.
+  /** `runEtl`'s fill: the reference's per-column modes, computed for every
+    * column in ONE aggregation over ONE input pass, then applied in one
+    * projection.
+    *
+    * The columns are unpivoted into typed slots ([[SlotExpand]]): each
+    * input row becomes one row per column, `(column index, one slot per
+    * distinct data type)`, so a 25-column CSV with 4 inferred types
+    * expands to 5-wide rows, not 26-wide ones as a grouping-sets
+    * aggregate would give. Counting `(index, slots)` counts each column's
+    * values in its own type, with `groupBy`'s float normalisation
+    * (-0.0 = 0.0, one NaN). Within index i every other slot is null, so
+    * ordering by (count desc, every slot asc nulls first) is column i's
+    * own typed `asc_nulls_first` tie-break — exactly the per-column
+    * query's ORDER BY. The per-column top-1 is the native bounded-heap
+    * TopK, so the driver fetches at most one row per column. The public
+    * `explode(array(struct(...)))` form gives the same rows but builds an
+    * array per input row; it measured slower than the direct `Expand`.
+    * A frame with no rows, or a column whose mode is null, is left as it
+    * is.
     */
   def fillNullsWithMode(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
     val target = (if (cols.isEmpty) df.columns.toSeq else cols).distinct
-    val modes = target.grouped(MaxGroupingSets).flatMap(typedModes(df, _)).toMap
+    val modes = typedModes(df, target)
     val filled = target.filter(modes.contains)
     if (filled.isEmpty) df
     else df.withColumns(filled.map(c => c -> coalesce(ref(c), lit(modes(c)))).toMap)
   }
 
-  /** Non-null typed modes of `cols` (at most 64) from one grouping-sets
-    * aggregation; a column with a null mode is absent.
-    */
+  /** Non-null typed modes of `cols`; a column with a null mode is absent. */
   private def typedModes(df: DataFrame, cols: Seq[String]): Map[String, Any] = {
-    val n = cols.size
-    val (gid, cnt) = ("__mode_gid", "__mode_cnt")
-    // grouping_id() sets the bit of every column NOT in the set, first
-    // column most significant: set i is all-ones minus bit (n - 1 - i)
-    val allOnes = -1L >>> (64 - n)
-    val colOf = cols.indices.map(i => (allOnes ^ (1L << (n - 1 - i))) -> i).toMap
-    val keyed = df
-      .groupingSets(cols.map(c => Seq(ref(c))), cols.map(ref): _*)
-      .agg(grouping_id().as(gid), count(lit(1)).as(cnt))
-    org.apache.spark.sql.graftnative.TopK
-      .perKey(keyed, Seq(gid), (cnt -> true) +: cols.map(_ -> false), 1)
+    val (rows, slotOf) = SlotExpand(df, cols)
+    val counted = rows.groupBy(rows.columns.toSeq.map(col): _*).count()
+    val order = ("count" -> true) +: slotOf.distinct.map(_ -> false)
+    TopK
+      .perKey(counted, Seq(SlotExpand.GroupCol), order, 1)
       .collect()
       .flatMap { r =>
-        val i = colOf(r.getAs[Number](gid).longValue)
-        Option(r.get(i)).map(cols(i) -> _)
+        val i = r.getAs[Int](SlotExpand.GroupCol)
+        Option(r.getAs[Any](slotOf(i))).map(cols(i) -> _)
       }
       .toMap
   }
@@ -88,7 +86,7 @@ object ModeFill {
     val counted = pairs
       .groupBy("col_name", "value")
       .agg(count(lit(1)).as("cnt"))
-    org.apache.spark.sql.graftnative.TopK
+    TopK
       .perKey(counted, Seq("col_name"), Seq(("cnt", true), ("value", false)), 1)
       .select("col_name", "value")
       .collect()

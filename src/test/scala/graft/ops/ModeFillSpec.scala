@@ -1,13 +1,14 @@
 package graft.ops
 
-import java.sql.Timestamp
+import java.sql.{Date, Timestamp}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
 import org.apache.spark.graft.ListenerSync
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 class ModeFillSpec extends SparkSpec {
@@ -114,9 +115,28 @@ class ModeFillSpec extends SparkSpec {
     assert(ModeFill.modesSinglePass(df)("n") == Some("10"))
   }
 
-  test("more than 64 columns: chunked grouping sets equal the per-column reference") {
+  /** `body`'s result and the number of queries the session ran for it. */
+  private def queriesRun[T](body: => T): (T, Int) = {
+    val queries = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    ListenerSync.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerSync.drain(spark.sparkContext)
+      (out, queries.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("more than 64 columns: one query equals the per-column reference") {
     val df = wideFrame(70, 240)
-    val got = ModeFill.fillNullsWithMode(df)
+    val (got, queries) = queriesRun(ModeFill.fillNullsWithMode(df))
+    assert(queries == 1)
     val want = perColumnReference(df)
     assert(got.schema == want.schema)
     assert(got.orderBy("id").collect().toSeq == want.orderBy("id").collect().toSeq)
@@ -134,19 +154,65 @@ class ModeFillSpec extends SparkSpec {
 
   test("25 columns are filled by exactly one query") {
     val df = wideFrame(25, 100)
-    val queries = new AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        queries.incrementAndGet()
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        queries.incrementAndGet()
+    assert(queriesRun(ModeFill.fillNullsWithMode(df))._2 == 1)
+  }
+
+  test("columns named like the fill's internal columns fill as any others") {
+    val df = wideFrame(6, 120)
+      .toDF("__g", "__s0", "__s1", "__s2", "count", "__mode_gid", "__mode_cnt")
+    val got = ModeFill.fillNullsWithMode(df)
+    val want = perColumnReference(df)
+    assert(got.schema == want.schema)
+    assert(got.orderBy("__g").collect().toSeq == want.orderBy("__g").collect().toSeq)
+    assert(got.filter(col("__mode_gid").isNull).count() == 0)
+  }
+
+  test("typed slots: two columns of every inferSchema type keep their own typed modes") {
+    // per type a (lo, hi) pair, lo < hi in the type's order; three of them
+    // order the other way as strings ("10" < "9", "-1" < "-2", "10.5" < "9.5")
+    val pairs = Seq[(DataType, Any, Any)](
+      (IntegerType, 9, 10),
+      (LongType, -2L, -1L),
+      (DoubleType, 9.5, 10.5),
+      (BooleanType, false, true),
+      (StringType, "a", "b"),
+      (TimestampType, Timestamp.valueOf("2024-01-02 00:00:00"),
+        Timestamp.valueOf("2024-01-10 00:00:00")),
+      (DateType, Date.valueOf("2024-01-02"), Date.valueOf("2024-01-10")))
+    // `_a` ties lo and hi 2-2 (lo wins); `_b` ties hi and null 2-2 (null
+    // wins, no fill). Counting the two same-typed columns together would
+    // make hi the mode of both
+    val columns = pairs.flatMap { case (t, lo, hi) =>
+      Seq(
+        (StructField(s"${t.typeName}_a", t), Seq(hi, lo, hi, lo, null)),
+        (StructField(s"${t.typeName}_b", t), Seq(hi, null, lo, null, hi)))
     }
-    ListenerSync.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      ModeFill.fillNullsWithMode(df)
-      ListenerSync.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(queries.get == 1)
+    val rows = columns.map(_._2).transpose.map(Row.fromSeq)
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(columns.map(_._1)))
+    val got = ModeFill.fillNullsWithMode(df).collect().toSeq
+    assert(got == perColumnReference(df).collect().toSeq)
+    pairs.zipWithIndex.foreach { case ((t, lo, _), k) =>
+      assert(got(4).get(2 * k) == lo, s"${t.typeName}_a")
+      assert(got(1).isNullAt(2 * k + 1), s"${t.typeName}_b")
+    }
+  }
+
+  test("-0.0 and 0.0 count as one value, and so do the NaNs, as in groupBy") {
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val df = Seq[(java.lang.Double, java.lang.Double)](
+      (-0.0, Double.NaN), (0.0, otherNaN), (1.0, 5.0), (1.0, null), (null, 6.0)
+    ).toDF("z", "n")
+    val got = ModeFill.fillNullsWithMode(df).collect().toSeq
+    assert(got == perColumnReference(df).collect().toSeq)
+    // z: 0.0 x2 ties 1.0 x2 and wins; n: NaN x2 beats every single value
+    assert(got(4).getDouble(0) == 0.0)
+    assert(got(3).getDouble(1).isNaN)
+  }
+
+  test("an unknown column name fails with an error that names it") {
+    val df = wideFrame(3, 10)
+    val e = intercept[Exception](ModeFill.fillNullsWithMode(df, Seq("c0", "no_such_col")))
+    assert(e.getMessage.contains("no_such_col"))
   }
 }

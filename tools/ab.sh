@@ -11,7 +11,11 @@
 # (.bench_build/records/*.json) and log are kept under the export directory.
 # The summary prints, per end-to-end metric in BENCHMARK.json, each side's
 # median and quartiles, the change/parent ratio of the medians, the pairs
-# the change won, and the failed operations over all runs.
+# the change won, and the failed operations over all runs. Under the table
+# one verdict line per metric applies the claim rule: a gain may be claimed
+# only when at least 10 pairs ran, the change won at least 9/10 of them
+# (ties count for neither), and its median is better than the parent's by
+# more than the parent's quartile spread (q3 - q1).
 set -euo pipefail
 [ $# -ge 3 ] || { sed -n 4p "$0" >&2; exit 2; }
 parent=$1 workload=$2 pairs=$3
@@ -64,6 +68,7 @@ def value(rec, name):
 print(f"workload {workload}, seeds 1-{pairs}, {pairs} pairs")
 print("| metric | parent median [q1, q3] | change median [q1, q3] | ratio | change won |")
 print("|---|---|---|---|---|")
+verdicts = []
 for m in json.load(open(bench))["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
     vals = {side: {s: value(recs[side][s], name) for s in seeds} for side in recs}
@@ -75,6 +80,17 @@ for m in json.load(open(bench))["end_to_end"]:
     cell = lambda q: f"{q[1]:.3f} [{q[0]:.3f}, {q[2]:.3f}]"
     print(f"| {name} | {cell(qs['parent'])} | {cell(qs['change'])} | x{ratio:.2f} | "
           f"{wins}/{len(both)} |")
+    won = pairs >= 10 and wins >= 0.9 * pairs
+    gap = (qs["parent"][1] - qs["change"][1]) * (1 if lower else -1)
+    spread = qs["parent"][2] - qs["parent"][0]
+    verdicts.append(
+        f"{name}: won {wins}/{pairs} pairs ({'at least 9/10' if won else 'under 9/10 or under 10 pairs'}); "
+        f"median better by {gap:.3f} against the parent's quartile spread {spread:.3f} "
+        f"({'more' if gap > spread else 'not more'}); "
+        f"gain {'CAN' if won and gap > spread else 'cannot'} be claimed")
+print()
+print("\n".join(verdicts))
+print()
 for side in recs:
     got = [r for r in recs[side].values() if r]
     failed = sum(r["failed"] for r in got)
