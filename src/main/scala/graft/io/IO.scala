@@ -1,8 +1,8 @@
 package graft.io
 
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graftnative.CsvLines
 import java.nio.file.{Files, Paths}
 
 /** Sources & sinks matching the reference's I/O surface (SURVEY.md §2A
@@ -25,6 +25,15 @@ object Sources {
     * unsplittable split. The lines are read with the session's Hadoop conf,
     * as the path read does, so `fs.*` keys set with `spark.conf.set` apply.
     *
+    * The header is read on the driver: the first non-blank record of the
+    * splits in partition order, through `TextInputFormat`'s own record
+    * reader, so a UTF-8 BOM, CRLF endings and a codec are handled as
+    * partition 0 handles them. The call then runs exactly one Spark job,
+    * the schema inference (`CSVInferSchema`, as the path read infers);
+    * the rows are parsed lazily, on each pass, by Spark's own
+    * `UnivocityParser` inside `FailureSafeParser`
+    * ([[org.apache.spark.sql.graftnative.CsvLines]]).
+    *
     * Departures from the path read:
     *  - every line equal to the header is dropped, so a header repeated
     *    mid-file (e.g. concatenated exports) is not parsed as a junk row.
@@ -38,17 +47,9 @@ object Sources {
     *    `runEtl` uses every column.
     */
   def csvInferred(spark: SparkSession, path: String): DataFrame = {
-    val sc = spark.sparkContext
     val conf = new JobConf(spark.sessionState.newHadoopConf())
     FileInputFormat.setInputPaths(conf, path)
-    val lines = sc
-      .hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
-        sc.defaultParallelism)
-      .map(_._2.toString)
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(spark.createDataset(lines)(Encoders.STRING))
+    CsvLines.read(spark, conf)
   }
 
   /** JSONL corpus source — the interchange format LLM training corpora

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.PartitionOrderedAvg
+import org.apache.spark.sql.types.DecimalType
 
 /** Insight aggregates over a cleaned loan table.
   *
@@ -12,10 +14,12 @@ import org.apache.spark.sql.functions._
   * The reference leaves by-type record order arbitrary; we order by
   * (count desc, loan_type asc nulls first) so goldens are stable.
   *
-  * `avg_loan_amount` merges one partial double sum per input partition,
-  * so its last bits depend on the partition count (and, on a cluster, on
-  * the order partials are fetched in). It is not bit-identical to the
-  * reference's mean or to a one-partition sum.
+  * `avg_loan_amount` adds one partial double sum per input partition, so
+  * its last bits depend on the partition count. They do not depend on the
+  * order tasks finish in: `compute`'s final aggregate reads the partials
+  * in map order (on a cluster, in the order they are fetched), and
+  * `observing` adds them in partition order. It is not bit-identical to
+  * the reference's mean or to a one-partition sum.
   */
 object Insights {
   case class LoanTypeCount(loan_type: Option[String], count: Long)
@@ -47,17 +51,43 @@ object Insights {
     val total = totals.headOption
     val byType =
       if (!hasType) None
-      else
-        Some(types.map { r =>
-          // inferSchema may type loan_type numerically — don't assume String
-          LoanTypeCount(Option(r.getAs[Any]("loan_type")).map(_.toString), r.getAs[Long]("count"))
-        })
+      else Some(types.map(r => typeCount(r.getAs[Any]("loan_type"), r.getAs[Long]("count"))))
     Summary(
       total.fold(0L)(_.getAs[Long]("count")),
-      if (!hasAmount) None
-      else total.flatMap(r => Option(r.getAs[Any]("avg"))).map(_.asInstanceOf[Number].doubleValue),
+      if (!hasAmount) None else total.flatMap(r => asDouble(r.getAs[Any]("avg"))),
       byType)
   }
+
+  /** `write(df)` with `compute`'s total and mean observed on the way: no
+    * job of their own. `byType` is taken as given, e.g. from the fill's
+    * counts ([[ModeFill.fillNullsWithModeCounting]]).
+    *
+    * An observed metric merges its task partials on the driver in the
+    * order the tasks finish, so the mean of a double column is taken with
+    * `PartitionOrderedAvg`, which adds them in partition order, as
+    * `compute`'s exchange does: the two agree to the bit on a frame of the
+    * same partitions. A decimal mean is exact in any order and stays `avg`.
+    */
+  def observing(df: DataFrame, byType: Option[Seq[LoanTypeCount]])(write: DataFrame => Unit): Summary = {
+    val amount = df.schema.find(_.name == "loan_amount")
+    val aggs = count(lit(1)).as("count") +: amount.toSeq.map { f =>
+      val c = col("loan_amount")
+      (if (f.dataType.isInstanceOf[DecimalType]) avg_(c) else PartitionOrderedAvg.avg(c)).as("avg")
+    }
+    val obs = Observation()
+    write(df.observe(obs, aggs.head, aggs.tail: _*))
+    val m = obs.get
+    Summary(
+      m("count").asInstanceOf[Long],
+      amount.flatMap(_ => asDouble(m("avg"))),
+      byType)
+  }
+
+  /** A by-type record; inferSchema may type loan_type numerically. */
+  def typeCount(loanType: Any, count: Long): LoanTypeCount =
+    LoanTypeCount(Option(loanType).map(_.toString), count)
+
+  private def asDouble(v: Any): Option[Double] = Option(v).map(_.asInstanceOf[Number].doubleValue)
 
   // `mean` shadows easily; alias the function we mean.
   private def avg_(c: org.apache.spark.sql.Column) = avg(c)

@@ -29,38 +29,67 @@ object ModeFill {
     * (-0.0 = 0.0, one NaN). Within index i every other slot is null, so
     * ordering by (count desc, every slot asc nulls first) is column i's
     * own typed `asc_nulls_first` tie-break — exactly the per-column
-    * query's ORDER BY. The per-column top-1 is the native bounded-heap
-    * TopK, so the driver fetches at most one row per column. The public
+    * query's ORDER BY. The per-column top-1 is the partial pass of the
+    * native bounded-heap TopK alone ([[TopK.perKeyCollect]]): each
+    * partition of the count sends the driver at most one row per column,
+    * and the driver merges them, so the count is one exchange. The public
     * `explode(array(struct(...)))` form gives the same rows but builds an
     * array per input row; it measured slower than the direct `Expand`.
     * A frame with no rows, or a column whose mode is null, is left as it
     * is.
     */
-  def fillNullsWithMode(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
+  def fillNullsWithMode(df: DataFrame, cols: Seq[String] = Nil): DataFrame =
+    fill(df, cols, Nil)._1
+
+  /** [[fillNullsWithMode]] over every column, plus each `counted` column's
+    * value counts after the fill, from the same job: `(value, count)` in
+    * the fill's order (count desc, typed value asc, nulls first). A column
+    * filled with a non-null mode has no null group; its nulls count as the
+    * mode, which stays first.
+    */
+  def fillNullsWithModeCounting(
+      df: DataFrame,
+      counted: Seq[String]): (DataFrame, Map[String, Seq[(Any, Long)]]) =
+    fill(df, Nil, counted)
+
+  private def fill(
+      df: DataFrame,
+      cols: Seq[String],
+      counted: Seq[String]): (DataFrame, Map[String, Seq[(Any, Long)]]) = {
     val target = (if (cols.isEmpty) df.columns.toSeq else cols).distinct
-    val modes = typedModes(df, target)
+    counted.foreach(c => require(target.contains(c), s"counted column $c is not filled"))
+    val (rows, slotOf) = SlotExpand(df, target)
+    val slots = slotOf.distinct
+    // a counted column's rows each get a key of their own, so all of them
+    // come back; any other column's rows share one key, top-1 of which is
+    // its mode
+    val keyed = rows
+      .groupBy(rows.columns.toSeq.map(col): _*)
+      .count()
+      .withColumn(ValueKey,
+        when(col(SlotExpand.GroupCol).isin(counted.map(target.indexOf): _*), struct(slots.map(col): _*)))
+    val order = ("count" -> true) +: slots.map(_ -> false)
+    // sorted by `order`, so each column's rows keep it and its first is the mode
+    val byCol = TopK
+      .perKeyCollect(keyed, Seq(SlotExpand.GroupCol, ValueKey), order, 1)
+      .toSeq
+      .groupBy(_.getAs[Int](SlotExpand.GroupCol))
+      .map { case (i, rs) => i -> rs.map(r => (r.getAs[Any](slotOf(i)), r.getAs[Long]("count"))) }
+    val modes = byCol.flatMap { case (i, vs) => Option(vs.head._1).map(target(i) -> _) }
+    val counts = counted.map { c =>
+      val values = byCol.getOrElse(target.indexOf(c), Nil)
+      c -> (if (!modes.contains(c)) values
+            else (values.head._1, values.head._2 + values.collect { case (null, n) => n }.sum) +:
+              values.tail.filter(_._1 != null))
+    }.toMap
     val filled = target.filter(modes.contains)
-    if (filled.isEmpty) df
-    else df.withColumns(filled.map(c => c -> coalesce(ref(c), lit(modes(c)))).toMap)
+    val out =
+      if (filled.isEmpty) df
+      else df.withColumns(filled.map(c => c -> coalesce(ref(c), lit(modes(c)))).toMap)
+    (out, counts)
   }
 
-  /** Non-null typed modes of `cols`; a column with a null mode is absent. */
-  private def typedModes(df: DataFrame, cols: Seq[String]): Map[String, Any] = {
-    val (rows, slotOf) = SlotExpand(df, cols)
-    val counted = rows.groupBy(rows.columns.toSeq.map(col): _*).count()
-    val order = ("count" -> true) +: slotOf.distinct.map(_ -> false)
-    TopK
-      .perKey(counted, Seq(SlotExpand.GroupCol), order, 1)
-      .collect()
-      .flatMap { r =>
-        val i = r.getAs[Int](SlotExpand.GroupCol)
-        Option(r.getAs[Any](slotOf(i))).map(cols(i) -> _)
-      }
-      .toMap
-  }
-
-  // column names are user-controlled: quote them so dots stay literal
-  private def ref(c: String) = col("`" + c.replace("`", "``") + "`")
+  private val ValueKey = "__k"
 
   /** Scale variant: ONE aggregation job for all columns instead of a
     * groupBy + driver collect per column (the reference's per-column shape
@@ -103,7 +132,7 @@ object ModeFill {
     target.foldLeft(df) { (cur, c) =>
       modes.getOrElse(c, None) match {
         case Some(m) =>
-          cur.withColumn(c, coalesce(col(c), lit(m).cast(df.schema(c).dataType)))
+          cur.withColumn(c, coalesce(ref(c), lit(m).cast(df.schema(c).dataType)))
         case None => cur
       }
     }

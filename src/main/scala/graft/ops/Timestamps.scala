@@ -28,7 +28,7 @@ object Timestamps {
   def splitTimestamp(df: DataFrame, tsCol: String): DataFrame =
     if (!df.columns.contains(tsCol)) df
     else
-      df.withColumn("parsed_ts", parseMulti(col(tsCol)))
+      df.withColumn("parsed_ts", parseMulti(ref(tsCol)))
         .withColumn("date", date_format(col("parsed_ts"), "yyyy-MM-dd"))
         .withColumn("time", date_format(col("parsed_ts"), "HH:mm:ss"))
         .drop("parsed_ts")

@@ -1,13 +1,14 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Top-k-per-key as a first-class physical operator (the full custom-
   * operator path: LogicalPlan node -> SparkStrategy -> SparkPlan).
@@ -26,12 +27,16 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * Row equivalence with the window formulation is exact when the ordering
   * is total (callers append a tiebreak column); output order within the
   * result is unspecified, like any exchange output.
+  *
+  * `partialOnly` plans the partial pass alone: at most k rows per key per
+  * partition, for a driver that merges them itself ([[TopK.perKeyCollect]]).
   */
 case class TopKPerKey(
     groupingKeys: Seq[Expression],
     order: Seq[SortOrder],
     k: Int,
-    child: LogicalPlan)
+    child: LogicalPlan,
+    partialOnly: Boolean = false)
   extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(newChild: LogicalPlan): LogicalPlan =
@@ -97,9 +102,10 @@ case class TopKPerKeyExec(
 
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKey(keys, order, k, child) =>
+    case TopKPerKey(keys, order, k, child, partialOnly) =>
       val partialExec = TopKPerKeyExec(keys, order, k, partial = true, planLater(child))
-      TopKPerKeyExec(keys, order, k, partial = false, partialExec) :: Nil
+      (if (partialOnly) partialExec
+       else TopKPerKeyExec(keys, order, k, partial = false, partialExec)) :: Nil
     case _ => Nil
   }
 }
@@ -120,6 +126,45 @@ object TopK {
       keyNames: Seq[String],
       orderCols: Seq[(String, Boolean)], // (column, descending?)
       k: Int): DataFrame = {
+    val (keys, order, plan) = resolve(df, keyNames, orderCols, k)
+    Dataset.ofRows(df.sparkSession.asInstanceOf[SparkSession], TopKPerKey(keys, order, k, plan))
+  }
+
+  /** The rows of `perKey(df, keyNames, orderCols, k)`, collected and sorted
+    * by `orderCols`, with one exchange and one job fewer: the query runs
+    * only the partial pass, so each partition sends the driver at most k
+    * rows per key, and the driver merges them with the operator's own
+    * `RowOrdering`. Meant for results small enough to collect.
+    */
+  def perKeyCollect(
+      df: DataFrame,
+      keyNames: Seq[String],
+      orderCols: Seq[(String, Boolean)],
+      k: Int): Array[Row] = {
+    val (keys, order, plan) = resolve(df, keyNames, orderCols, k)
+    val qe = Dataset
+      .ofRows(df.sparkSession.asInstanceOf[SparkSession],
+        TopKPerKey(keys, order, k, plan, partialOnly = true))
+      .queryExecution
+    val partials = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+    val keyProj = UnsafeProjection.create(keys, plan.output)
+    val taken = new java.util.HashMap[UnsafeRow, Integer]()
+    val merged = partials.sorted(RowOrdering.create(order, plan.output)).filter { r =>
+      val n = taken.merge(keyProj(r).copy(), 1, (a, b) => a + b)
+      n <= k
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(DataTypeUtils.fromAttributes(plan.output))
+    merged.map(toRow(_).asInstanceOf[Row])
+  }
+
+  /** Installs the strategy and resolves the key and order columns. */
+  private def resolve(
+      df: DataFrame,
+      keyNames: Seq[String],
+      orderCols: Seq[(String, Boolean)],
+      k: Int): (Seq[Attribute], Seq[SortOrder], LogicalPlan) = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
     spark.synchronized {
@@ -137,8 +182,6 @@ object TopK {
     val order = orderCols.map { case (n, desc) =>
       SortOrder(attr(n), if (desc) Descending else Ascending)
     }
-    Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      TopKPerKey(keyNames.map(attr), order, k, analyzed))
+    (keyNames.map(attr), order, analyzed)
   }
 }

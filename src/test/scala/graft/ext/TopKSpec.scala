@@ -33,6 +33,16 @@ class TopKSpec extends SparkSpec {
     assert(plan.contains("Exchange"), "final phase must cluster by key")
   }
 
+  test("perKeyCollect: perKey's rows, sorted by the order, with one exchange fewer") {
+    val o = Tables.orders(spark, sf)
+    val order = Seq(("o_totalprice", true), ("o_orderkey", false))
+    val got = TopK.perKeyCollect(o, Seq("o_orderpriority"), order, 3).toSeq
+    val want = TopK.perKey(o, Seq("o_orderpriority"), order, 3)
+      .orderBy(desc("o_totalprice"), asc("o_orderkey")).collect().toSeq
+    assert(got == want)
+    assert(got.size == 15)
+  }
+
   test("heap eviction respects ordering under many duplicates") {
     import spark.implicits._
     val df = (1 to 100).map(i => ("g", i % 7, i.toLong)).toDF("g", "v", "id")

@@ -2,10 +2,13 @@ package graft.io
 
 import java.net.URI
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.GZIPOutputStream
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** A local-disk FileSystem under its own scheme, registered only in the
@@ -62,6 +65,59 @@ class SourcesSpec extends SparkSpec {
     test(s"split read equals the path read: $f") {
       assertSameRows(Sources.csvInferred(spark, resource(f)), pathRead(resource(f)))
     }
+
+  // line-level edge cases: each is read by the same Hadoop line reader on
+  // both sides, so the header read on the driver must agree with split 0
+  private val edgeFixtures = Seq(
+    "edge_zero_byte.csv", "edge_crlf.csv", "edge_utf8_bom.csv",
+    "edge_quoted_newline.csv", "edge_blank_first_line.csv", "edge_no_final_newline.csv")
+
+  for (f <- edgeFixtures)
+    test(s"split read equals the path read: $f") {
+      val got = Sources.csvInferred(spark, resource(f))
+      val want = pathRead(resource(f))
+      assert(got.schema == want.schema)
+      assert(got.collect().toSet == want.collect().toSet)
+      assert(got.count() == want.count())
+    }
+
+  test("the edge fixtures parse as the loan header and rows") {
+    for (f <- edgeFixtures.tail) {
+      val got = Sources.csvInferred(spark, resource(f))
+      assert(got.columns.toSeq == Seq("loan_id", "loan_amount", "loan_type", "timestamp"), f)
+    }
+    assert(Sources.csvInferred(spark, resource("edge_zero_byte.csv")).columns.isEmpty)
+    // a quoted newline is cut by the line reader, on both reads
+    assert(Sources.csvInferred(spark, resource("edge_quoted_newline.csv")).count() == 5)
+    assert(Sources.csvInferred(spark, resource("edge_crlf.csv"))
+      .filter("loan_type = 'personal'").count() == 3)
+  }
+
+  test("a directory of CSVs reads as the path read reads it") {
+    val dir = Files.createTempDirectory("graft_src_dir")
+    val header = "loan_id,loan_amount,loan_type"
+    for (k <- 0 until 3)
+      Files.write(dir.resolve(s"part$k.csv"),
+        (header +: (1 to 200).map(i => s"${k * 1000 + i},${i % 9 * 100}.25,t${i % 4}"))
+          .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val got = Sources.csvInferred(spark, dir.toString)
+    assertSameRows(got, pathRead(dir.toString))
+    assert(got.count() == 600)
+  }
+
+  test("the read runs one Spark job, the schema inference, before it returns") {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Sources.csvInferred(spark, multiSplitCsv)
+      ListenerSync.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1)
+  }
 
   test("split read equals the path read on a multi-split CSV") {
     val got = Sources.csvInferred(spark, multiSplitCsv)

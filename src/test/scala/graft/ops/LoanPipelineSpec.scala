@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 import org.apache.spark.graft.ListenerSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
 
 class LoanPipelineSpec extends SparkSpec {
 
@@ -105,6 +106,96 @@ class LoanPipelineSpec extends SparkSpec {
     assert(back.count() == 0)
     assert(back.columns.toSeq ==
       Seq("loan_id", "loan_amount", "loan_type", "timestamp", "date", "time"))
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsRun[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerSync.drain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def tempCsv(lines: Seq[String]): String = {
+    val p = Files.createTempDirectory("graft_etl_csv").resolve("loans.csv")
+    Files.write(p, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    p.toString
+  }
+
+  /** Several splits' worth of loans with cent amounts, so the mean's
+    * partial sums round differently in different orders. */
+  private lazy val centsCsv: String = tempCsv(
+    "loan_id,loan_amount,loan_type,timestamp" +: (1 to 6000).map { i =>
+      val amount = if (i % 97 == 0) "" else f"${(i * 7919L % 4950000 + 50000) / 100.0}%.2f"
+      val kind = if (i % 31 == 0) "" else Seq("personal", "auto", "mortgage", "student")(i * i % 7 % 4)
+      f"$i%d,$amount%s,$kind%s,2024-01-${i % 28 + 1}%02d 10:30:00"
+    })
+
+  test("a call runs at most four jobs and leaves nothing cached") {
+    val out = Files.createTempDirectory("graft_etl7").toString
+    val (r, jobs) = jobsRun(LoanPipeline.runEtl(spark, centsCsv, s"$out/parquet"))
+    assert(jobs <= 4, s"$jobs jobs")
+    assert(r.cleaned.storageLevel == StorageLevel.NONE)
+    assert(r.insights.total_loans == 6000)
+  }
+
+  test("insights equal Insights.compute on the cleaned frame, on every fixture CSV") {
+    val csvs = Seq("loans_basic.csv", "loans_bad_ts.csv", "loans_drifted.csv",
+      "loans_header_only.csv", "loans_null_mode.csv", "loans_ragged.csv").map(resource) :+ centsCsv
+    for ((csv, k) <- csvs.zipWithIndex) {
+      val out = Files.createTempDirectory("graft_etl8").toString
+      val r = LoanPipeline.runEtl(spark, csv, s"$out/parquet$k")
+      // counts and by-type order exactly; the mean adds the same partials
+      // in the same order, so to the bit
+      assert(r.insights == Insights.compute(r.cleaned), csv)
+    }
+  }
+
+  test("timestampCol = loan_type: the split reads loan_type, the insights do not change") {
+    val out = Files.createTempDirectory("graft_etl10").toString
+    val r = LoanPipeline.runEtl(spark, resource("loans_basic.csv"), s"$out/parquet",
+      timestampCol = "loan_type")
+    assert(r.insights == Insights.compute(r.cleaned))
+    assert(r.insights.avg_loan_amount.contains(1750.0))
+    val byType = r.insights.by_loan_type.get.map(t => t.loan_type.get -> t.count)
+    assert(byType == Seq("personal" -> 6, "auto" -> 3, "mortgage" -> 1))
+    val back = spark.read.parquet(s"$out/parquet")
+    // no loan type parses as a timestamp; the timestamp column is kept as read
+    assert(back.filter(back("date").isNotNull).count() == 0)
+    assert(back.filter(back("timestamp").isNull).count() == 1)
+  }
+
+  test("a numeric loan_type keeps the typed by-type order: nulls first, 9 before 10") {
+    // counts 2, 2, 2, 1: null ties 9 and 10 and wins, so the fill is a no-op
+    val csv = tempCsv("loan_id,loan_amount,loan_type" +:
+      Seq("1,1.0,10", "2,3.0,9", "3,2.0,", "4,4.0,10", "5,5.0,9", "6,6.0,", "7,0.0,7"))
+    val out = Files.createTempDirectory("graft_etl11").toString
+    val r = LoanPipeline.runEtl(spark, csv, s"$out/parquet")
+    assert(r.insights.by_loan_type.contains(Seq(
+      Insights.LoanTypeCount(None, 2), Insights.LoanTypeCount(Some("9"), 2),
+      Insights.LoanTypeCount(Some("10"), 2), Insights.LoanTypeCount(Some("7"), 1))))
+    assert(r.insights == Insights.compute(r.cleaned))
+    // a non-null mode takes the null group: 9 x3 beats 10 x2
+    val filled = tempCsv("loan_id,loan_type" +: Seq("1,10", "2,9", "3,", "4,10", "5,9", "6,9"))
+    val r2 = LoanPipeline.runEtl(spark, filled, s"$out/parquet2")
+    assert(r2.insights.by_loan_type.contains(Seq(
+      Insights.LoanTypeCount(Some("9"), 4), Insights.LoanTypeCount(Some("10"), 2))))
+    assert(r2.insights == Insights.compute(r2.cleaned))
+  }
+
+  test("a timestamp column named with a dot splits end-to-end") {
+    val csv = tempCsv("loan_id,ts.x" +: Seq("1,2024-01-15 10:30:00", "2,03/20/2024 14:45:10"))
+    val out = Files.createTempDirectory("graft_etl12").toString
+    LoanPipeline.runEtl(spark, csv, s"$out/parquet", timestampCol = "ts.x")
+    val dates = spark.read.parquet(s"$out/parquet").select("date").collect().map(_.getString(0))
+    assert(dates.toSet == Set("2024-01-15", "2024-03-20"))
   }
 
   test("insights: one aggregate in at most two jobs, by-type order typed") {

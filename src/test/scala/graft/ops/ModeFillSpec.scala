@@ -210,6 +210,34 @@ class ModeFillSpec extends SparkSpec {
     assert(got(3).getDouble(1).isNaN)
   }
 
+  test("a column named with a dot fills through both fills") {
+    val df = Seq[(Integer, String)]((1, "a"), (1, "a"), (null, "b"), (2, null))
+      .toDF("a.b", "c")
+    val want = Seq(Row(1, "a"), Row(1, "a"), Row(1, "b"), Row(2, "a"))
+    assert(ModeFill.fillNullsWithMode(df).collect().toSeq == want)
+    assert(ModeFill.fillNullsWithModeSinglePass(df).collect().toSeq == want)
+  }
+
+  test("counted columns: value counts after the fill, in the fill's order, in one query") {
+    val df = Seq[(Integer, String)](
+      (10, "x"), (9, "x"), (null, null), (10, "y"), (9, null), (null, null), (7, "y"))
+      .toDF("n", "s")
+    val ((filled, counts), queries) = queriesRun(ModeFill.fillNullsWithModeCounting(df, Seq("n", "s")))
+    assert(queries == 1)
+    // n: null, 9 and 10 tie 2-2-2 and null wins, so n keeps its nulls;
+    // s: null x3 beats x and y, so s is not filled either
+    assert(counts("n") == Seq((null, 2L), (9, 2L), (10, 2L), (7, 1L)))
+    assert(counts("s") == Seq((null, 3L), ("x", 2L), ("y", 2L)))
+    // a filled column's nulls count as its mode, which stays first
+    val more = df.union(Seq[(Integer, String)]((9, "x")).toDF("n", "s"))
+    val (out, c2) = ModeFill.fillNullsWithModeCounting(more, Seq("n"))
+    assert(c2("n") == Seq((9, 5L), (10, 2L), (7, 1L)))
+    val direct = out.groupBy("n").count().orderBy(desc("count"), asc_nulls_first("n"))
+      .collect().map(r => (r.get(0), r.getLong(1))).toSeq
+    assert(c2("n") == direct)
+    assert(filled.collect().toSeq == ModeFill.fillNullsWithMode(df).collect().toSeq)
+  }
+
   test("an unknown column name fails with an error that names it") {
     val df = wideFrame(3, 10)
     val e = intercept[Exception](ModeFill.fillNullsWithMode(df, Seq("c0", "no_such_col")))

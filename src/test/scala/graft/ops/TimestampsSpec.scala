@@ -27,6 +27,12 @@ class TimestampsSpec extends SparkSpec {
     assert(out.contains("2024-01-15"))
   }
 
+  test("a timestamp column named with a dot is read as one name") {
+    val df = Seq("2024-01-15 10:30:00", "25-12-2023 08:00:00").toDF("ts.x")
+    val out = Timestamps.splitTimestamp(df, "ts.x").select("date").collect().map(_.getString(0))
+    assert(out.toSet == Set("2024-01-15", "2023-12-25"))
+  }
+
   test("missing timestamp column => no-op (pyspark_etl.py:53 contract)") {
     val df = Seq((1, "a")).toDF("id", "v")
     val out = Timestamps.splitTimestamp(df, "timestamp")

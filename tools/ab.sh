@@ -12,7 +12,9 @@
 # The summary prints, per end-to-end metric in BENCHMARK.json, each side's
 # median and quartiles, the change/parent ratio of the medians, the pairs
 # the change won, and the failed operations over all runs. Under the table
-# one verdict line per metric applies the claim rule: a gain may be claimed
+# come, for the ETL workloads, each side's median jobs, tasks and
+# cache_bytes per warm call, then one verdict line per metric for the claim
+# rule: a gain may be claimed
 # only when at least 10 pairs ran, the change won at least 9/10 of them
 # (ties count for neither), and its median is better than the parent's by
 # more than the parent's quartile spread (q3 - q1).
@@ -88,6 +90,20 @@ for m in json.load(open(bench))["end_to_end"]:
         f"median better by {gap:.3f} against the parent's quartile spread {spread:.3f} "
         f"({'more' if gap > spread else 'not more'}); "
         f"gain {'CAN' if won and gap > spread else 'cannot'} be claimed")
+# listener counts per timed call: what a warm call cost besides time
+# (the ETL records carry them per call; the lanes records do not)
+def counts(side, key):
+    return [c[key] for r in recs[side].values() if r
+            for c in r.get("jvm", {}).get("calls", []) if c.get("kind") == "warm" and key in c]
+
+rows = [(key, {side: counts(side, key) for side in recs}) for key in ("jobs", "tasks", "cache_bytes")]
+if any(v for _, vals in rows for v in vals.values()):
+    print()
+    print("| per warm call | parent median | change median |")
+    print("|---|---|---|")
+    for key, vals in rows:
+        med = {side: statistics.median(v) if v else float("nan") for side, v in vals.items()}
+        print(f"| {key} | {med['parent']:g} | {med['change']:g} |")
 print()
 print("\n".join(verdicts))
 print()
