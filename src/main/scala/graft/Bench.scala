@@ -1,45 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
-/** Accumulates shuffle write bytes across stages; reset per query so the
-  * bench can report the scale-relevant metric (shuffle VOLUME, the thing
-  * that actually grows with data size) next to wall time.
-  */
-private final class ShuffleTally extends SparkListener {
-  val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-    bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Shuffle-partition override for scale gating: the driver default
-    // (= cpus) is right at sf0.1, but a ×100 ScaleGen decade grows the
-    // per-partition aggregation working set ×100 at fixed partitions —
+    // SPARK_GRAFT_SHUFFLE_PARTS is the override for scale gating: the
+    // default (= cpus) is right at sf0.1, but a ×100 ScaleGen decade grows
+    // the per-partition aggregation working set ×100 at fixed partitions —
     // on a real cluster partitions scale with data, so the decade gate
-    // measures with SPARK_GRAFT_SHUFFLE_PARTS ∝ data to keep the
-    // per-partition working set comparable across decades.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // noise isolation (round 8): the DEFAULT codegen cache holds 100
-      // compiled classes — a 260+-query suite evicts everything every
-      // rep, so each rep pays janino compile + JIT tier-up again and the
-      // per-query min becomes tier-up luck (measured: identical-code
-      // re-runs drifted 7% median / 31% p90 per query). Sized to hold
-      // the whole suite, reps 2-3 run on warm compiled+JITed code.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // measures with partitions ∝ data to keep the per-partition working
+    // set comparable across decades.
+    val cfg = Harness.settings(sys.env)
+    val spark = Harness.session(cfg)
     // JVM/codegen warmup so the first measured query doesn't absorb
     // session startup (aggregation + shuffle + codegen + parquet reader).
     spark.range(1000000).selectExpr("sum(id % 7)", "count(distinct id % 13)").collect()
@@ -63,10 +36,7 @@ object Bench {
       spark.catalog.clearCache()
       t
     }
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    def drain(): Unit =
-      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
+    val tally = new QueryTally(spark.sparkContext)
     // min of N reps per query: single-sample times at this scale carry
     // ±40% machine noise (BENCH_r02's 12s vs 4s dedup_pipeline_e2e);
     // the min is the stable "cost of the plan" signal. Reps are
@@ -80,7 +50,8 @@ object Bench {
     // stall is visible as an outlier sample rather than a lost cause.
     // Shuffle bytes are plan-deterministic, so the FINAL round's tally
     // (listener bus drained on both window edges) is THE per-query
-    // shuffle volume.
+    // shuffle volume; the file artifact carries that window's other
+    // counts (jobs, tasks, input, spill, CPU, GC) next to it.
     // optional comma-separated name filter (local scale-gating only — the
     // driver never sets it, so the per-round artifact always covers the
     // full set)
@@ -101,22 +72,22 @@ object Bench {
     val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val repTimes = Array.fill(qlist.size)(new Array[Double](reps))
-    val shuffleMb = new Array[Double](qlist.size)
+    val counts = new Array[QueryTally.Counts](qlist.size)
     for (r <- 0 until reps) {
       // settle the heap between rep rounds: accumulated garbage from a
       // whole suite pass otherwise lands as GC pauses inside the NEXT
       // round's queries (part of the measured cross-run drift)
       System.gc()
       qlist.zipWithIndex.foreach { case ((name, fn), qi) =>
-        if (r == reps - 1) { drain(); tally.bytes.set(0L) }
+        if (r == reps - 1) tally.reset()
         repTimes(qi)(r) = runOnce(name, fn)
-        if (r == reps - 1) { drain(); shuffleMb(qi) = tally.bytes.get / 1048576.0 }
+        if (r == reps - 1) counts(qi) = tally.counts()
       }
     }
     val results = qlist.zipWithIndex.map { case ((name, _), qi) =>
       val times = repTimes(qi).toSeq
       val t = if (times.contains(-1.0)) -1.0 else times.min
-      (name, t, if (t < 0) -1.0 else shuffleMb(qi))
+      (name, t, if (t < 0) -1.0 else counts(qi).shuffleWriteBytes / 1048576.0)
     }
     def f(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f(v) }
@@ -139,7 +110,7 @@ object Bench {
       .mkString("{", ",", "}")
     val tail =
       s""""canary":$canaryJson,""" +
-        s""""sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$parts,"action":"noop_write",""" +
+        s""""sf":"$sfDir","cpus":${cfg.cpus},"shuffle_partitions":${cfg.shuffleParts},"action":"noop_write",""" +
         s""""reps":$reps,"agg":"min","failed":${failed.mkString("[", ",", "]")}}"""
     // every individual sample goes to the FILE artifact only (stdout
     // stays one compact driver-parsable line): with round-robin reps an
@@ -149,9 +120,12 @@ object Bench {
         s"\"" + k + "\":" + repTimes(qi).map(f).mkString("[", ",", "]")
       }
       .mkString("{", ",", "}")
+    val countsJson = qlist.zipWithIndex
+      .map { case ((k, _), qi) => s"\"" + k + "\":" + counts(qi).toJson }
+      .mkString("{", ",", "}")
     val line = s"""$head,"queries":$qs,"shuffle_mb":$sh,$tail"""
-    val fileLine =
-      line.dropRight(1) + s""","rep_order":"round_robin","reps_sec":$allReps}"""
+    val fileLine = line.dropRight(1) +
+      s""","rep_order":"round_robin","reps_sec":$allReps,"counts":$countsJson}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last_run.json"), fileLine)
     println(line)
     // The driver captures only the LAST ~2000 chars of stdout; the full

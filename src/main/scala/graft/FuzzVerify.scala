@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.Random
 
@@ -241,16 +240,7 @@ object FuzzVerify {
     val outDir = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(50)
     val seed = args.lift(3).map(_.toLong).getOrElse(42L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     tables.foreach(t =>
       Tables.table(spark, sfDir, t.name).createOrReplaceTempView(t.name))
     new java.io.File(outDir).mkdirs()

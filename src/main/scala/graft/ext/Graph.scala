@@ -41,7 +41,7 @@ object Graph {
     * second iteration and renormalized through a broadcast 1-row join, so
     * each renorm referenced its input twice and each iteration nested the
     * previous one — the 2-iteration plan carried 158 Exchange nodes and
-    * re-read ~31× the edge table (measured, ProfileOne: 4.7M records in
+    * re-read ~31× the edge table (measured with QueryTally: 4.7M records in
     * for a 150k-row base). Now every half-step's O(V) score frame is
     * localCheckpointed ONCE and its total Σ is read driver-side from that
     * materialization (one 1-row partial agg over in-memory blocks — the
@@ -118,7 +118,7 @@ object Graph {
     // bounded scalar, read driver-side from that materialization once
     // (same move as hitsFixed's renorm) so no iteration re-runs the count
     // aggregate or carries a 1-row broadcast join. Ranks are identical:
-    // same integers, same formula. Measured (ProfileOne, sf0.1): 3.56M →
+    // same integers, same formula. Measured (QueryTally, sf0.1): 3.56M →
     // ~0.9M records read, bench 2.05 → ~1.1 s.
     val nodes = ed.select(col("src").as("node")).distinct().ckpt()
     val nNodes = nodes.count()

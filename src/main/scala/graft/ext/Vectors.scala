@@ -20,17 +20,12 @@ object Vectors {
 
   /** Left-fold dot product of two double[] columns — a native codegen'd
     * Catalyst expression (see [[org.apache.spark.sql.graftnative.DoubleDot]]);
-    * same fold order as the HOF formulation below, ~10x less per-element
-    * overhead in pairwise-similarity hot paths.
+    * same fold order as the built-ins form
+    * `aggregate(zip_with(a, b, (x, y) -> x * y), 0.0, (acc, e) -> acc + e)`,
+    * ~10x less per-element overhead in pairwise-similarity hot paths.
     */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graftnative.VectorExpressions.ddot(a, b)
-
-  /** Built-ins-only equivalent of [[dot]] (kept as the portability
-    * reference; must produce bit-identical results).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 

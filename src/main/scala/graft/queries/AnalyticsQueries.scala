@@ -76,7 +76,7 @@ object AnalyticsQueries {
     // OPTIMIZATION r10, examined and deliberately left LAZY: the plan
     // text shows 83 Exchanges from `und`/`oriented` fan-out, but AQE's
     // runtime exchange reuse already collapses the identical subtrees
-    // (measured, ProfileOne: 16 jobs / 600k records / 2.7 s cpu — one
+    // (measured with QueryTally: 16 jobs / 600k records / 2.7 s cpu — one
     // real derivation). Eager localCheckpoints here were TRIED and made
     // the lane SLOWER (wall 2.0 → 4.4 s): they serialize construction
     // into sequential jobs and pay block writes, to dedup work that was

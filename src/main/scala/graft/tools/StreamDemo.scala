@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.streaming.FileWatch
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -15,14 +14,7 @@ import java.nio.file.Files
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val in = Files.createTempDirectory("sd_in")
     val ckpt = Files.createTempDirectory("sd_ckpt").toString

@@ -112,8 +112,7 @@ object TopKStrategy extends SparkStrategy {
 
 /** User-facing entry: `TopK.perKey(df, keys, orderCols, k)` where
   * orderCols must form a total order (append a unique tiebreak). Installs
-  * the planner strategy idempotently via the public experimental hook
-  * (also installable session-wide through [[GraftExtensions]]).
+  * the planner strategy idempotently via the public experimental hook.
   *
   * Memory contract: state is k rows per DISTINCT KEY per task with no
   * spill path — meant for bounded-cardinality keys (categories, tenants,

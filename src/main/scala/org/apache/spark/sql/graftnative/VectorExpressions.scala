@@ -26,9 +26,9 @@ case class DoubleDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "double_dot"
 
-  // Exactly the `aggregate(zip_with(a,b,*),0.0,+)` semantics, so the
-  // RewriteHofDotProduct optimizer rule is a sound substitution:
-  // unequal lengths (zip_with null-pads) or any null element => null.
+  // Exactly the `aggregate(zip_with(a,b,*),0.0,+)` semantics (ExtensionsSpec
+  // pins the two equal): unequal lengths (zip_with null-pads) or any null
+  // element => null.
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]

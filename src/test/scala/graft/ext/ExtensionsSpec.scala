@@ -2,32 +2,9 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.RewriteHofDotProduct
 
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
-
-  private val vecs = Seq(
-    (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
-    (2L, Array(0.5f, -1.0f, 2.5f), Array(1.0f, 1.0f, 1.0f))
-  ).toDF("id", "a", "b")
-    .select(col("id"), Vectors.toDouble(col("a")).as("a"), Vectors.toDouble(col("b")).as("b"))
-
-  test("RewriteHofDotProduct turns the HOF pattern into double_dot") {
-    val saved = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations = Seq(RewriteHofDotProduct)
-      // parquet-backed input: local literal relations get constant-folded
-      // away before optimizer rules can observe the HOF pattern
-      val e = graft.Tables.embeddings(spark, sf)
-        .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-      val df = e.select(col("vec_id"), Vectors.dotHof(col("v"), col("v")).as("d"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("double_dot"))
-      // rewritten result equals the direct native expression
-      val direct = e.select(col("vec_id"), Vectors.dot(col("v"), col("v")).as("d"))
-      assert(df.orderBy("vec_id").collect().toSeq == direct.orderBy("vec_id").collect().toSeq)
-    } finally spark.experimental.extraOptimizations = saved
-  }
 
   test("DoubleDot matches HOF semantics on null elements and unequal lengths") {
     val df = spark.sql(

@@ -2,13 +2,10 @@ package graft.io
 
 import java.net.URI
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.GZIPOutputStream
 
-import graft.SparkSpec
+import graft.{QueryTally, SparkSpec}
 import org.apache.hadoop.fs.RawLocalFileSystem
-import org.apache.spark.graft.ListenerSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** A local-disk FileSystem under its own scheme, registered only in the
@@ -106,17 +103,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("the read runs one Spark job, the schema inference, before it returns") {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerSync.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Sources.csvInferred(spark, multiSplitCsv)
-      ListenerSync.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 1)
+    val (_, c) = QueryTally.around(spark.sparkContext)(Sources.csvInferred(spark, multiSplitCsv))
+    assert(c.jobs == 1)
   }
 
   test("split read equals the path read on a multi-split CSV") {

@@ -1,11 +1,8 @@
 package graft.ops
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import graft.SparkSpec
-import org.apache.spark.graft.ListenerSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{QueryTally, SparkSpec}
 import org.apache.spark.storage.StorageLevel
 
 class LoanPipelineSpec extends SparkSpec {
@@ -109,18 +106,9 @@ class LoanPipelineSpec extends SparkSpec {
   }
 
   /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsRun[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerSync.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerSync.drain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+  private def jobsRun[T](body: => T): (T, Long) = {
+    val (out, c) = QueryTally.around(spark.sparkContext)(body)
+    (out, c.jobs)
   }
 
   private def tempCsv(lines: Seq[String]): String = {
@@ -204,18 +192,8 @@ class LoanPipelineSpec extends SparkSpec {
     val df = Seq[(Option[Int], Double)](
       (Some(10), 1.0), (Some(9), 3.0), (None, 2.0), (Some(10), 4.0),
       (Some(9), 5.0), (None, 6.0), (Some(7), 0.0)).toDF("loan_type", "loan_amount")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerSync.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val s = try {
-      val s = Insights.compute(df)
-      ListenerSync.drain(spark.sparkContext)
-      s
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 2)
+    val (s, jobs) = jobsRun(Insights.compute(df))
+    assert(jobs <= 2)
     assert(s.total_loans == 7)
     assert(s.avg_loan_amount.contains(3.0))
     assert(s.by_loan_type.contains(Seq(

@@ -1,5 +1,6 @@
 package graft.props
 
+import graft.Harness
 import graft.ext.{Dedup, Vectors}
 import graft.ops.ModeFill
 import org.apache.spark.sql.SparkSession
@@ -12,24 +13,14 @@ import org.scalacheck.Prop.forAll
   */
 object OperatorProps extends Properties("graft.operators") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_props").toString)
-      .getOrCreate()
-    // this suite runs ~11k tiny jobs; at the default INFO level it wrote
-    // ~300k scheduler log lines of synchronous console I/O (r11 timing)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // this suite runs ~11k tiny jobs; at the default INFO level it wrote
+  // ~300k scheduler log lines of synchronous console I/O (r11 timing),
+  // hence Harness's WARN level
+  private lazy val spark: SparkSession = Harness.builder(cpus = 2, shuffleParts = 2)
+    .config(
+      "spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh_props").toString)
+    .getOrCreate()
 
   import scala.jdk.CollectionConverters._
 

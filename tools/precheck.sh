@@ -1,12 +1,22 @@
 #!/usr/bin/env bash
-# Driver-parity pre-submit check: runs graft.Verify + the DuckDB oracle
-# compare (tools/check_oracle.py) at all three scale factors — the same
-# pipeline the round driver and the judge run. Use before every commit
-# that touches a query or its oracle SQL.
+# Driver-parity pre-submit check: greps src/ for session builders and
+# listeners outside graft.Harness and graft.QueryTally, then runs
+# graft.Verify + the DuckDB oracle compare (tools/check_oracle.py) at all
+# three scale factors — the same pipeline the round driver and the judge
+# run. Use before every commit that touches a query or its oracle SQL.
 #
 #   tools/precheck.sh [sf ...]     # default: 0.001 0.01 0.1
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# One session builder (graft.Harness) and one listener (graft.QueryTally):
+# a builder or listener anywhere else in src/ is drift, caught before any
+# JVM starts.
+drift=$(grep -rlE 'SparkSession\.builder|extends SparkListener|new SparkListener' src \
+  | grep -vxE 'src/main/scala/graft/(Harness|QueryTally)\.scala' || true)
+if [ -n "$drift" ]; then
+  echo "session builder or SparkListener outside Harness.scala/QueryTally.scala:" $drift
+  exit 1
+fi
 sfs=("$@")
 [ ${#sfs[@]} -eq 0 ] && sfs=(0.001 0.01 0.1)
 fail=0
