@@ -48,10 +48,12 @@ object Bench {
     // BENCH_r05 (pivot_orders..q10, ~50 s phantom refuted by judge
     // re-timing). Every rep is persisted in bench_last_run.json so a
     // stall is visible as an outlier sample rather than a lost cause.
-    // Shuffle bytes are plan-deterministic, so the FINAL round's tally
-    // (listener bus drained on both window edges) is THE per-query
-    // shuffle volume; the file artifact carries that window's other
-    // counts (jobs, tasks, input, spill, CPU, GC) next to it.
+    // The FINAL round's tally (listener bus drained on both window edges)
+    // is recorded per query: shuffle volume, jobs, tasks, input, spill,
+    // CPU, GC. It is one sample, not a plan constant: two sf0.01 runs
+    // agreed on 9 of 12 lanes, but dedup_clusters and dedup_ngram_jaccard
+    // each gained a job in one run, and percentiles_exact_rank wrote
+    // 66,478 shuffle bytes in one and 65,554 in the other.
     // optional comma-separated name filter (local scale-gating only — the
     // driver never sets it, so the per-round artifact always covers the
     // full set)

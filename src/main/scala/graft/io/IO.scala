@@ -26,9 +26,18 @@ object Sources {
     * as the path read does, so `fs.*` keys set with `spark.conf.set` apply.
     *
     * The header is read on the driver: the first non-blank record of the
-    * splits in partition order, through `TextInputFormat`'s own record
-    * reader, so a UTF-8 BOM, CRLF endings and a codec are handled as
-    * partition 0 handles them. The call then runs exactly one Spark job,
+    * first file's splits, through `TextInputFormat`'s own record reader,
+    * so a UTF-8 BOM, CRLF endings and a codec are handled as partition 0
+    * handles them. In a directory, every other file's header is read the
+    * same way and must equal the first file's; one that differs (columns
+    * reordered, added or missing) fails the read with an
+    * `IllegalArgumentException` naming both files and both headers. The
+    * read fails rather than mapping columns by name: the reference reads
+    * one file per call and never merges files, and mapping by position,
+    * what the path read does, turns the drifted header into a data row and
+    * every column into a string, so `runEtl` would report a plausible
+    * wrong `total_loans`. A one-file input reads no record beyond its
+    * header. The call then runs exactly one Spark job,
     * the schema inference (`CSVInferSchema`, as the path read infers);
     * the rows are parsed lazily, on each pass, by Spark's own
     * `UnivocityParser` inside `FailureSafeParser`

@@ -627,9 +627,8 @@ object RelationalQueries {
 
   /** Spark's native `session_window` operator (batch mode): gap-based
     * session assembly as a first-class grouping expression instead of the
-    * lag/cumsum manual rewrite (`events_sessionize`) or the stateful
-    * streaming assembler (StatefulSessions) — three routes to the same
-    * semantics, and this one's session merge happens inside the
+    * lag/cumsum manual rewrite (`events_sessionize`) — two routes to the
+    * same semantics, and this one's session merge happens inside the
     * aggregation operator with no window-function pass at all. The oracle
     * reconstructs sessions the manual way, so it also proves the native
     * operator and the manual rewrite agree on every count and span.

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftnative
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{JobConf, Reporter, TextInputFormat}
+import org.apache.hadoop.mapred.{FileSplit, JobConf, Reporter, TextInputFormat}
 import org.apache.hadoop.util.ReflectionUtils
 import org.apache.spark.rdd.{HadoopPartition, RDD}
 import org.apache.spark.sql.DataFrame
@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.StructType
   *
   * The Dataset form costs a job to `take(1)` the header and encodes every
   * line to a `UTF8String` row and back to a `String` on each pass. Here the
-  * header is the first non-blank record of the splits, in partition order,
-  * read on the driver with `TextInputFormat`'s own record reader, so a
-  * byte-order mark, CRLF endings and a compression codec come out as
-  * partition 0 sees them. The one job is the schema inference
+  * header is the first non-blank record of the first file's splits, read on
+  * the driver with `TextInputFormat`'s own record reader, so a byte-order
+  * mark, CRLF endings and a compression codec come out as partition 0 sees
+  * them. Every other file's header is read the same way and must equal it
+  * (see [[graft.io.Sources.csvInferred]]). The one job is the schema inference
   * (`CSVInferSchema.infer`); the rows are parsed lazily by
   * `UnivocityParser` inside `FailureSafeParser`, each pass straight from
   * the lines. `internalCreateDataFrame` is `private[sql]`, hence this
@@ -41,7 +42,7 @@ object CsvLines {
     val lines = splits.map(_._2.toString)
     val options = new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
       sqlConf.csvColumnPruning, sqlConf.sessionLocalTimeZone)
-    val header = firstLine(splits, conf, options)
+    val header = firstHeader(splits, conf, options)
     val schema = header
       .flatMap(h => Option(new CsvParser(options.asParserSettings).parseLine(h)))
       .fold(new StructType()) { names =>
@@ -72,17 +73,29 @@ object CsvLines {
       header.fold(kept)(CSVUtils.filterHeaderLine(kept, _, options))
     }
 
-  /** The first non-blank record of `rdd`'s splits, taken in partition order. */
-  private def firstLine(rdd: RDD[_], conf: JobConf, options: CSVOptions): Option[String] = {
+  /** The first file's header: per file, the first non-blank record of its
+    * splits in partition order. Each later file's header is read the same
+    * way, so a one-file input reads no more than its first record; a file
+    * whose header differs fails the read, naming both files and headers.
+    */
+  private def firstHeader(rdd: RDD[_], conf: JobConf, options: CSVOptions): Option[String] = {
     val format = ReflectionUtils.newInstance(classOf[TextInputFormat], conf)
-    rdd.partitions.iterator.map { p =>
-      val split = p.asInstanceOf[HadoopPartition].inputSplit.value
+    def first(split: FileSplit): Option[String] = {
       val reader = format.getRecordReader(split, conf, Reporter.NULL)
       try {
         val (k, v) = (reader.createKey(), reader.createValue())
         val records = Iterator.continually(reader.next(k, v)).takeWhile(identity).map(_ => v.toString)
         CSVUtils.filterCommentAndEmpty(records, options).nextOption()
       } finally reader.close()
-    }.collectFirst { case Some(line) => line }
+    }
+    val splits = rdd.partitions.toSeq.map(_.asInstanceOf[HadoopPartition].inputSplit.value
+      .asInstanceOf[FileSplit])
+    val headers = splits.map(_.getPath).distinct.flatMap { file =>
+      splits.iterator.filter(_.getPath == file).map(first).collectFirst { case Some(h) => file -> h }
+    }
+    for ((file0, h0) <- headers.headOption; (file, h) <- headers.find(_._2 != h0))
+      throw new IllegalArgumentException(
+        s"CSV header of $file differs from that of $file0: [$h] vs [$h0]")
+    headers.headOption.map(_._2)
   }
 }

@@ -26,7 +26,7 @@ case class DoubleDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "double_dot"
 
-  // Exactly the `aggregate(zip_with(a,b,*),0.0,+)` semantics (ExtensionsSpec
+  // Exactly the `aggregate(zip_with(a,b,*),0.0,+)` semantics (VectorsSpec
   // pins the two equal): unequal lengths (zip_with null-pads) or any null
   // element => null.
   override def nullSafeEval(a: Any, b: Any): Any = {

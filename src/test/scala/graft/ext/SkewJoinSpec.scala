@@ -1,12 +1,14 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
-/** AQE skew handling is the join-side answer to hot keys (Skew.saltedAgg
-  * covers aggregations): a synthetic 90%-one-key join must come out of
-  * adaptive planning with the skewed partition split (`skew=true`), and
-  * results must equal the non-adaptive run.
+/** Hot keys: salting (`Skew.saltedJoin`, `Skew.saltedAgg`) must equal the
+  * direct plan exactly, and AQE skew handling, the join-side answer, must
+  * come out of adaptive planning on a synthetic 90%-one-key join with the
+  * skewed partition split (`skew=true`) and results equal to the
+  * non-adaptive run.
   */
 class SkewJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -23,6 +25,24 @@ class SkewJoinSpec extends SparkSpec {
     val salted = Skew.saltedJoin(facts, dim, Seq("k"), salts = 8)
       .agg(count(lit(1)), sum("v").cast("long"), min("name"), max("name"))
       .collect().head.toString
+    assert(salted == direct)
+  }
+
+  test("salted aggregation equals direct aggregation exactly") {
+    val l = Tables.lineitem(spark, sf)
+    val direct = l
+      .groupBy("l_returnflag")
+      .agg(
+        count(lit(1)).as("n"),
+        sum(col("l_quantity").cast(DecimalType(12, 2))).as("total"))
+      .orderBy("l_returnflag")
+      .collect()
+      .toSeq
+    val salted = Skew
+      .saltedAgg(l, Seq("l_returnflag"), col("l_quantity").cast(DecimalType(12, 2)), 8)
+      .orderBy("l_returnflag")
+      .collect()
+      .toSeq
     assert(salted == direct)
   }
 

@@ -7,9 +7,8 @@ import org.apache.hadoop.fs.Path
 /** Incremental bin-pack OPTIMIZE ([[Snapshots.compactSegments]]): the
   * small-file collapse a streaming-ingested table needs — O(small bytes)
   * rewritten, big segments carried by pointer, deletion vectors rebased,
-  * ONE publish, time travel and vacuum semantics intact. The 300-segment
-  * streaming-soak interplay lives in SnapshotMergeSoakSpec; here the
-  * contract is pinned on deterministic hand-built tables.
+  * ONE publish, time travel and vacuum semantics intact, pinned on
+  * deterministic hand-built tables.
   */
 class SegmentCompactionSpec extends SparkSpec {
   import spark.implicits._

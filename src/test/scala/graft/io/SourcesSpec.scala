@@ -102,6 +102,40 @@ class SourcesSpec extends SparkSpec {
     assert(got.count() == 600)
   }
 
+  /** A directory of two loan CSVs: part0 under `header`, part1 as given. */
+  private def twoFileDir(header: String, second: Array[Byte]): String = {
+    val dir = Files.createTempDirectory("graft_src_dir")
+    Files.write(dir.resolve("part0.csv"),
+      (header +: (1 to 20).map(i => s"$i,${i * 100}.5,personal")).mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+    Files.write(dir.resolve("part1.csv"), second)
+    dir.toString
+  }
+
+  private val drifted = Seq(
+    "a reordered" -> ("loan_id,loan_type,loan_amount", "21,auto,700.5"),
+    "an extra-column" -> ("loan_id,loan_amount,loan_type,branch", "21,700.5,auto,B1"),
+    "a missing-column" -> ("loan_id,loan_amount", "21,700.5"))
+
+  for ((kind, (header2, row)) <- drifted)
+    test(s"a directory whose second file has $kind header fails, naming both files") {
+      val header = "loan_id,loan_amount,loan_type"
+      val dir = twoFileDir(header, s"$header2\n$row\n".getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException](Sources.csvInferred(spark, dir))
+      for (part <- Seq("part0.csv", "part1.csv", header, header2))
+        assert(e.getMessage.contains(part), e.getMessage)
+    }
+
+  test("a directory whose second file has a BOM and CRLF endings under the same header reads typed") {
+    val header = "loan_id,loan_amount,loan_type"
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    val crlf = (header +: (21 to 40).map(i => s"$i,${i * 100}.5,auto")).mkString("", "\r\n", "\r\n")
+    val got = Sources.csvInferred(spark, twoFileDir(header, bom ++ crlf.getBytes("UTF-8")))
+    assert(got.schema.map(_.dataType.simpleString) == Seq("int", "double", "string"))
+    assert(got.count() == 40)
+    assert(got.filter("loan_type = 'auto'").count() == 20)
+  }
+
   test("the read runs one Spark job, the schema inference, before it returns") {
     val (_, c) = QueryTally.around(spark.sparkContext)(Sources.csvInferred(spark, multiSplitCsv))
     assert(c.jobs == 1)

@@ -13,8 +13,9 @@
 # median and quartiles, the change/parent ratio of the medians, the pairs
 # the change won, and the failed operations over all runs. Under the table
 # come, for the ETL workloads, each side's median jobs, tasks and
-# cache_bytes per warm call, then one verdict line per metric for the claim
-# rule: a gain may be claimed
+# cache_bytes per warm call, for the lanes workloads each lane's median
+# noop-pass seconds per side and their ratio, then one verdict line per
+# metric for the claim rule: a gain may be claimed
 # only when at least 10 pairs ran, the change won at least 9/10 of them
 # (ties count for neither), and its median is better than the parent's by
 # more than the parent's quartile spread (q3 - q1).
@@ -104,6 +105,27 @@ if any(v for _, vals in rows for v in vals.values()):
     for key, vals in rows:
         med = {side: statistics.median(v) if v else float("nan") for side, v in vals.items()}
         print(f"| {key} | {med['parent']:g} | {med['change']:g} |")
+# per-lane noop seconds, for the lanes workloads (their records keep every
+# pass): a pass total sums every lane's noise, so one lane's change can
+# hide in warm_s
+def lane_times(side):
+    out = {}
+    for r in recs[side].values():
+        for p in (r or {}).get("jvm", {}).get("passes", []):
+            for l in p:
+                if l.get("kind") == "noop" and not l.get("error"):
+                    out.setdefault(l["lane"], []).append(l["s"])
+    return out
+
+lanes = {side: lane_times(side) for side in recs}
+if any(lanes.values()):
+    print()
+    print("| lane (noop s) | parent median | change median | ratio |")
+    print("|---|---|---|---|")
+    for lane in sorted(set(lanes["parent"]) | set(lanes["change"])):
+        med = {side: statistics.median(lanes[side].get(lane) or [float("nan")]) for side in lanes}
+        print(f"| {lane} | {med['parent']:.3f} | {med['change']:.3f} | "
+              f"x{med['change'] / med['parent']:.2f} |")
 print()
 print("\n".join(verdicts))
 print()

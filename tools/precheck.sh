@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Driver-parity pre-submit check: greps src/ for session builders and
-# listeners outside graft.Harness and graft.QueryTally, then runs
+# Pre-submit check: lists src/main files nothing references,
+# greps src/ for session builders and listeners outside graft.Harness and
+# graft.QueryTally, then runs
 # graft.Verify + the DuckDB oracle compare (tools/check_oracle.py) at all
 # three scale factors — the same pipeline the round driver and the judge
 # run. Use before every commit that touches a query or its oracle SQL.
@@ -8,6 +9,30 @@
 #   tools/precheck.sh [sf ...]     # default: 0.001 0.01 0.1
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# Reachability: a src/main file none of whose top-level object, class or
+# trait names appears in the code (comments stripped, strings kept) of
+# another src/main or perfbench/scala file is reached by no lane, entry
+# point or benchmark, only by its own spec. Files with a `def main` are
+# launched, not referenced. Like the grep below, this needs no JVM.
+unreached=$(python3 - <<'EOF'
+import pathlib, re
+strip = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
+decl = re.compile(r"^(?:(?:private|protected)(?:\[\w+\])?\s+|(?:final|sealed|abstract|case|implicit|package)\s+)*"
+                  r"(?:object|class|trait)\s+(\w+)", re.M)
+files = sorted(pathlib.Path("src/main").rglob("*.scala")) + sorted(pathlib.Path("perfbench/scala").rglob("*.scala"))
+code = {f: strip.sub(lambda m: m.group() if m.group()[0] in "\"'" else " ", f.read_text()) for f in files}
+words = {f: set(re.findall(r"\w+", c)) for f, c in code.items()}
+for f in files:
+    if f.parts[0] == "src" and not re.search(r"\bdef main\b", code[f]):
+        names = set(decl.findall(code[f]))
+        if not any(names & w for g, w in words.items() if g != f):
+            print(f)
+EOF
+)
+if [ -n "$unreached" ]; then
+  echo "src/main files no other src/main or perfbench/scala code references:" $unreached
+  exit 1
+fi
 # One session builder (graft.Harness) and one listener (graft.QueryTally):
 # a builder or listener anywhere else in src/ is drift, caught before any
 # JVM starts.
