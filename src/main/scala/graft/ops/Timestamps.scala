@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.TimestampExpressions
 
 /** Multi-format timestamp parsing + date/time string projection.
   *
@@ -13,17 +14,18 @@ import org.apache.spark.sql.functions._
   * column (SURVEY.md §1). Missing input column => no-op
   * (pyspark_etl.py:53 probes `columns` first).
   *
-  * We use `try_to_timestamp` so behavior is parse-failure==null under
-  * Spark 4's ANSI default as well as with ANSI off (the reference ran
-  * Spark 3.4 CORRECTED-policy semantics).
+  * The parse has the value of a `coalesce` of `try_to_timestamp` calls,
+  * so a parse failure is null under Spark 4's ANSI default as well as
+  * with ANSI off (the reference ran Spark 3.4 CORRECTED-policy semantics).
+  * A string column is parsed without throwing an exception per missed
+  * format ([[org.apache.spark.sql.graftnative.FirstTimestamp]]).
   */
 object Timestamps {
   val Formats: Seq[String] =
     Seq("yyyy-MM-dd HH:mm:ss", "MM/dd/yyyy HH:mm:ss", "dd-MM-yyyy HH:mm:ss")
 
   /** First-match-wins multi-format parse; null when no format matches. */
-  def parseMulti(c: Column): Column =
-    coalesce(Formats.map(f => try_to_timestamp(c, lit(f))): _*)
+  def parseMulti(c: Column): Column = TimestampExpressions.firstTimestamp(c, Formats)
 
   def splitTimestamp(df: DataFrame, tsCol: String): DataFrame =
     if (!df.columns.contains(tsCol)) df

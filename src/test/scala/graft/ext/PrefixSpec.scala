@@ -1,8 +1,10 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{QueryTally, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** The distributed prefix-sum machinery must be BIT-IDENTICAL to the
   * single-window formulation it replaces (order_deciles, pack_sequences
@@ -121,5 +123,117 @@ class PrefixSpec extends SparkSpec {
     val scalable = CorpusOps.packSequencesScalable(one, "shard", "id", "tok", 64L, 8)
       .select("id", "seq_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(scalable == simple)
+  }
+
+  /** runningSum and both runningMax frames of `tok` over (`shard`, `id`)
+    * against the single-window formulation, keyed by (shard, id). */
+  private def assertMatchesWindows(df: DataFrame, nParts: Int): Unit = {
+    def w(end: Long) = Window
+      .partitionBy("shard")
+      .orderBy("id")
+      .rowsBetween(Window.unboundedPreceding, end)
+    def keyed(out: DataFrame, c: String) = out
+      .select("shard", "id", c)
+      .collect()
+      .map(r => (Option(r.get(0)), r.getLong(1)) -> r.getLong(2))
+      .toMap
+    val expected = df
+      .withColumn("s", sum("tok").over(w(Window.currentRow)))
+      .withColumn("mi", max("tok").over(w(Window.currentRow)))
+      .withColumn("me", coalesce(max("tok").over(w(-1L)), lit(Long.MinValue)))
+    val (shard, order) = (col("shard"), Seq(col("id")))
+    def same(got: DataFrame, c: String, what: String): Unit = {
+      val (g, e) = (keyed(got, c), keyed(expected, c))
+      assert(g == e, s"$what at $nParts partitions: ${g.size} rows against ${e.size}, " +
+        s"first differences ${(g.toSet diff e.toSet).take(3)}")
+    }
+    same(Prefix.runningSum(df, shard, order, col("tok"), "s", nParts), "s", "runningSum")
+    same(Prefix.runningMax(df, shard, order, col("tok"), "mi", true, nParts), "mi",
+      "inclusive runningMax")
+    same(Prefix.runningMax(df, shard, order, col("tok"), "me", false, nParts), "me",
+      "exclusive runningMax")
+  }
+
+  /** How many range partitions each shard's rows fall in, for the layout
+    * `repartitionByRange(n, shard, id)` gives `df`. */
+  private def partitionsPerShard(df: DataFrame, n: Int): Map[Option[Any], Long] = df
+    .repartitionByRange(n, col("shard"), col("id"))
+    .withColumn("pid", spark_partition_id())
+    .groupBy("shard")
+    .agg(countDistinct("pid"))
+    .collect()
+    .map(r => Option(r.get(0)) -> r.getLong(1))
+    .toMap
+
+  test("the scans match single windows at 1, 8 and 16 partitions") {
+    Seq(1, 8, 16).foreach(assertMatchesWindows(docs, _))
+  }
+
+  test("null shard keys form one shard of their own") {
+    val withNulls = docs.withColumn("shard", when(col("id") % 5 === 0, lit(null)).otherwise(col("shard")))
+    assert(withNulls.filter(col("shard").isNull).count() == 100)
+    assertMatchesWindows(withNulls, 8)
+  }
+
+  test("more partitions than distinct keys leave range partitions empty") {
+    val few = Seq(("a", 1L, 4L), ("a", 2L, 9L), ("b", 3L, 1L), ("b", 4L, 2L), ("c", 5L, 7L))
+      .toDF("shard", "id", "tok")
+    val sizes = few.repartitionByRange(16, col("shard"), col("id")).rdd.glom().map(_.length).collect()
+    assert(sizes.length < 16 || sizes.contains(0), sizes.mkString(","))
+    assertMatchesWindows(few, 16)
+  }
+
+  test("a shard spanning three or more partitions beside shards inside one") {
+    val small = Seq("a", "c", "d").flatMap(s => (1L to 3L).map(i => (s, i, i * 11 % 7)))
+    val mixed = (small ++ (1L to 200L).map(i => ("b", i, i * 37 % 90))).toDF("shard", "id", "tok")
+    val spans = partitionsPerShard(mixed, 8)
+    assert(spans(Some("b")) >= 3, spans.toString)
+    assert(Seq("a", "c", "d").exists(s => spans(Some(s)) == 1), spans.toString)
+    assertMatchesWindows(mixed, 8)
+  }
+
+  test("a decimal running sum is exact and keeps the offset join's type") {
+    val amounts = docs.withColumn("amt", (col("tok") / 7).cast(DecimalType(10, 2)))
+    val w = Window
+      .partitionBy("shard")
+      .orderBy("id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def keyed(out: DataFrame) = out
+      .select("shard", "id", "cum")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getDecimal(2))
+      .toMap
+    val got = Prefix.runningSum(amounts, col("shard"), Seq(col("id")), col("amt"), "cum", 8)
+    // coalesce(sum of decimal(20,2) partials, 0L) is decimal(30,2); plus
+    // the local decimal(20,2) window sum gives decimal(31,2)
+    assert(got.schema("cum").dataType == DecimalType(31, 2))
+    assert(keyed(got) == keyed(amounts.withColumn("cum", sum("amt").over(w))))
+  }
+
+  test("an exclusive runningMax carries the previous partition's last row") {
+    // increasing values: every row's exclusive max is its predecessor,
+    // which for the first row of each range partition sits in the one
+    // before it
+    val rising = (1L to 80L).map(i => ("one", i, i)).toDF("shard", "id", "tok")
+    assert(partitionsPerShard(rising, 8)(Some("one")) >= 2)
+    val got = Prefix
+      .runningMax(rising, col("shard"), Seq(col("id")), col("tok"), "m", inclusive = false,
+        numPartitions = 8)
+      .select("id", "m")
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(got == (1L to 80L).map(i => i -> (if (i == 1L) Long.MinValue else i - 1)).toMap)
+  }
+
+  test("a runningSums pass over 50 rows in one shard runs at most 6 jobs") {
+    // range sample + exchange + checkpoint, the carry fetch, the window's
+    // exchange and the result stage; the offset join took 9
+    val fifty = (1L to 50L).map(i => (i, i % 7)).toDF("id", "v")
+    val (_, c) = QueryTally.around(spark.sparkContext) {
+      Prefix.runningSums(fifty, lit(0L), Seq(col("id")), Seq(col("v") -> "cum"), 4)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(c.jobs <= 6, c.toJson)
   }
 }

@@ -131,6 +131,28 @@ object OperatorProps extends Properties("graft.operators") {
       got == expected
     }
 
+  property("Prefix.runningMax equals the driver-computed per-shard prefix max, inclusive and exclusive") =
+    forAll(shardRowGen, Gen.chooseNum(1, 6), Gen.oneOf(true, false)) { (rows, nParts, inclusive) =>
+      import spark.implicits._
+      val df = rows.zipWithIndex.map { case ((s, v), i) => (s, i.toLong, v) }
+        .toDF("shard", "id", "v")
+      val got = graft.ext.Prefix
+        .runningMax(df, col("shard"), Seq(col("id")), col("v"), "m", inclusive, nParts)
+        .select("shard", "id", "m").collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val expected = rows.zipWithIndex
+        .map { case ((s, v), i) => (s, i.toLong, v) }
+        .groupBy(_._1)
+        .flatMap { case (_, g) =>
+          val sorted = g.sortBy(_._2)
+          val maxes = sorted.scanLeft(Long.MinValue)(_ max _._3)
+          sorted.zip(if (inclusive) maxes.tail else maxes.init).map { case ((s, i, _), m) =>
+            (s, i) -> m
+          }
+        }
+      got == expected
+    }
+
   private val edgeGen: Gen[List[(Long, Long)]] =
     Gen.listOfN(18, Gen.zip(Gen.chooseNum(0L, 14L), Gen.chooseNum(0L, 14L)))
       .map(_.filter { case (a, b) => a != b })

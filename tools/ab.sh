@@ -14,11 +14,16 @@
 # the change won, and the failed operations over all runs. Under the table
 # come, for the ETL workloads, each side's median jobs, tasks and
 # cache_bytes per warm call, for the lanes workloads each lane's median
-# noop-pass seconds per side and their ratio, then one verdict line per
-# metric for the claim rule: a gain may be claimed
+# noop-pass seconds per side and their ratio, then two verdict lines per
+# metric. The first is for the claim rule: a gain may be claimed
 # only when at least 10 pairs ran, the change won at least 9/10 of them
 # (ties count for neither), and its median is better than the parent's by
-# more than the parent's quartile spread (q3 - q1).
+# more than the parent's quartile spread (q3 - q1). The second is for the
+# no-regression rule, with the metric's bound from BENCHMARK.json: the
+# metric is unresolved when the parent's quartile spread exceeds the bound
+# (as a share of its median) and not every change run beats every parent
+# run; otherwise it is within the bound, or worse beyond it when the
+# change's median is worse than the parent's by more than the bound.
 set -euo pipefail
 [ $# -ge 3 ] || { sed -n 4p "$0" >&2; exit 2; }
 parent=$1 workload=$2 pairs=$3
@@ -91,6 +96,22 @@ for m in json.load(open(bench))["end_to_end"]:
         f"median better by {gap:.3f} against the parent's quartile spread {spread:.3f} "
         f"({'more' if gap > spread else 'not more'}); "
         f"gain {'CAN' if won and gap > spread else 'cannot'} be claimed")
+    runs = {side: [v for v in vals[side].values() if v is not None] for side in vals}
+    beats_all = bool(runs["change"] and runs["parent"]) and (
+        max(runs["change"]) < min(runs["parent"]) if lower
+        else min(runs["change"]) > max(runs["parent"]))
+    worse = (ratio - 1) if lower else (1 - ratio)
+    rel_spread = spread / qs["parent"][1]
+    if rel_spread > m["bound"] and not beats_all:
+        state = "UNRESOLVED (the parent's spread exceeds the bound)"
+    elif worse > m["bound"]:
+        state = "WORSE beyond the bound"
+    else:
+        state = "within the bound"
+    verdicts.append(
+        f"{name}: no regression check, bound {m['bound']:.2f}: change median worse by "
+        f"{worse:+.3f} of the parent's; parent spread {rel_spread:.3f} of its median; "
+        f"every change run beats every parent run: {'yes' if beats_all else 'no'}; {state}")
 # listener counts per timed call: what a warm call cost besides time
 # (the ETL records carry them per call; the lanes records do not)
 def counts(side, key):
