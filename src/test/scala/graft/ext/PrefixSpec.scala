@@ -22,23 +22,7 @@ class PrefixSpec extends SparkSpec {
     .toDF("shard", "id", "tok")
 
   test("runningSum equals the single-window cumulative sum exactly") {
-    val w = Window
-      .partitionBy("shard")
-      .orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expected = docs
-      .withColumn("cum", sum("tok").over(w))
-      .select("shard", "id", "cum")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val got = Prefix
-      .runningSum(docs, col("shard"), Seq(col("id")), col("tok"), "cum", 8)
-      .select("shard", "id", "cum")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(got == expected)
+    Seq(1, 8, 16).foreach(assertSums(docs, _))
   }
 
   test("globalRank equals row_number over the total order, one shard case") {
@@ -60,37 +44,7 @@ class PrefixSpec extends SparkSpec {
   }
 
   test("runningMax matches the single-window prefix max, inclusive and exclusive") {
-    val wIncl = Window
-      .partitionBy("shard")
-      .orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wExcl = Window
-      .partitionBy("shard")
-      .orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val expected = docs
-      .withColumn("mi", max("tok").over(wIncl))
-      .withColumn("me", coalesce(max("tok").over(wExcl), lit(Long.MinValue)))
-      .select("shard", "id", "mi", "me")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
-      .toMap
-    val gotIncl = Prefix
-      .runningMax(docs, col("shard"), Seq(col("id")), col("tok"), "m", inclusive = true,
-        numPartitions = 8)
-      .select("shard", "id", "m")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val gotExcl = Prefix
-      .runningMax(docs, col("shard"), Seq(col("id")), col("tok"), "m", inclusive = false,
-        numPartitions = 8)
-      .select("shard", "id", "m")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(gotIncl == expected.view.mapValues(_._1).toMap)
-    assert(gotExcl == expected.view.mapValues(_._2).toMap)
+    Seq(1, 8, 16).foreach(assertMaxes(docs, _))
   }
 
   test("packSequencesScalable is row-identical to packSequences") {
@@ -125,33 +79,43 @@ class PrefixSpec extends SparkSpec {
     assert(scalable == simple)
   }
 
-  /** runningSum and both runningMax frames of `tok` over (`shard`, `id`)
-    * against the single-window formulation, keyed by (shard, id). */
-  private def assertMatchesWindows(df: DataFrame, nParts: Int): Unit = {
+  /** `tok`'s running sum (`s`) and inclusive (`mi`) and exclusive (`me`)
+    * running max within `shard` in `id` order, by single windows. */
+  private def byWindows(df: DataFrame): DataFrame = {
     def w(end: Long) = Window
       .partitionBy("shard")
       .orderBy("id")
       .rowsBetween(Window.unboundedPreceding, end)
-    def keyed(out: DataFrame, c: String) = out
+    df.withColumn("s", sum("tok").over(w(Window.currentRow)))
+      .withColumn("mi", max("tok").over(w(Window.currentRow)))
+      .withColumn("me", coalesce(max("tok").over(w(-1L)), lit(Long.MinValue)))
+  }
+
+  /** Column `c` of a scan over `df` against [[byWindows]], keyed by (shard, id). */
+  private def assertSame(got: DataFrame, df: DataFrame, c: String, what: String): Unit = {
+    def keyed(out: DataFrame) = out
       .select("shard", "id", c)
       .collect()
       .map(r => (Option(r.get(0)), r.getLong(1)) -> r.getLong(2))
       .toMap
-    val expected = df
-      .withColumn("s", sum("tok").over(w(Window.currentRow)))
-      .withColumn("mi", max("tok").over(w(Window.currentRow)))
-      .withColumn("me", coalesce(max("tok").over(w(-1L)), lit(Long.MinValue)))
-    val (shard, order) = (col("shard"), Seq(col("id")))
-    def same(got: DataFrame, c: String, what: String): Unit = {
-      val (g, e) = (keyed(got, c), keyed(expected, c))
-      assert(g == e, s"$what at $nParts partitions: ${g.size} rows against ${e.size}, " +
-        s"first differences ${(g.toSet diff e.toSet).take(3)}")
+    val (g, e) = (keyed(got), keyed(byWindows(df)))
+    assert(g == e, s"$what: ${g.size} rows against ${e.size}, " +
+      s"first differences ${(g.toSet diff e.toSet).take(3)}")
+  }
+
+  private def assertSums(df: DataFrame, nParts: Int): Unit =
+    assertSame(Prefix.runningSum(df, col("shard"), Seq(col("id")), col("tok"), "s", nParts), df,
+      "s", s"runningSum at $nParts partitions")
+
+  private def assertMaxes(df: DataFrame, nParts: Int): Unit =
+    Seq(true -> "mi", false -> "me").foreach { case (inclusive, c) =>
+      val got = Prefix.runningMax(df, col("shard"), Seq(col("id")), col("tok"), c, inclusive, nParts)
+      assertSame(got, df, c, s"runningMax (inclusive $inclusive) at $nParts partitions")
     }
-    same(Prefix.runningSum(df, shard, order, col("tok"), "s", nParts), "s", "runningSum")
-    same(Prefix.runningMax(df, shard, order, col("tok"), "mi", true, nParts), "mi",
-      "inclusive runningMax")
-    same(Prefix.runningMax(df, shard, order, col("tok"), "me", false, nParts), "me",
-      "exclusive runningMax")
+
+  private def assertMatchesWindows(df: DataFrame, nParts: Int): Unit = {
+    assertSums(df, nParts)
+    assertMaxes(df, nParts)
   }
 
   /** How many range partitions each shard's rows fall in, for the layout
@@ -164,10 +128,6 @@ class PrefixSpec extends SparkSpec {
     .collect()
     .map(r => Option(r.get(0)) -> r.getLong(1))
     .toMap
-
-  test("the scans match single windows at 1, 8 and 16 partitions") {
-    Seq(1, 8, 16).foreach(assertMatchesWindows(docs, _))
-  }
 
   test("null shard keys form one shard of their own") {
     val withNulls = docs.withColumn("shard", when(col("id") % 5 === 0, lit(null)).otherwise(col("shard")))
@@ -192,7 +152,7 @@ class PrefixSpec extends SparkSpec {
     assertMatchesWindows(mixed, 8)
   }
 
-  test("a decimal running sum is exact and keeps the offset join's type") {
+  test("a decimal running sum is exact and typed as partial sums plus the local sum") {
     val amounts = docs.withColumn("amt", (col("tok") / 7).cast(DecimalType(10, 2)))
     val w = Window
       .partitionBy("shard")
@@ -228,7 +188,7 @@ class PrefixSpec extends SparkSpec {
 
   test("a runningSums pass over 50 rows in one shard runs at most 6 jobs") {
     // range sample + exchange + checkpoint, the carry fetch, the window's
-    // exchange and the result stage; the offset join took 9
+    // exchange and the result stage
     val fifty = (1L to 50L).map(i => (i, i % 7)).toDF("id", "v")
     val (_, c) = QueryTally.around(spark.sparkContext) {
       Prefix.runningSums(fifty, lit(0L), Seq(col("id")), Seq(col("v") -> "cum"), 4)
